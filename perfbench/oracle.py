@@ -37,12 +37,9 @@ class Oracle:
         self._sql = entry.oracle_sql()
         self.rows = self.con.sql(f"SELECT count(*) FROM read_parquet('{table}/*.parquet')").fetchone()[0]
 
-    def _view(self, name: str, key: str, where: str = "true") -> None:
+    def _view(self, name: str, key: str) -> None:
         """Materialise one oracle query once per run."""
-        self.con.execute(
-            f"CREATE TABLE IF NOT EXISTS {name} AS "
-            f"SELECT * FROM ({_rel(self._sql[key], self.table)}) WHERE {where}"
-        )
+        self.con.execute(f"CREATE TABLE IF NOT EXISTS {name} AS {_rel(self._sql[key], self.table)}")
 
     def _diff(self, a: str, b: str) -> int:
         """Rows in the multiset difference a − b plus b − a."""
@@ -94,8 +91,7 @@ class Oracle:
     def check_stateful(self, out_dir: str) -> int:
         self._view("o_rate", "rate_limit")
         self._view("o_multi", "multiline_count")
-        self._view("o_sess", "sessionize", where="kind = 'session'")
-        self._view("o_flow", "sessionize", where="kind = 'flowrep'")
+        self._view("o_sessionize", "sessionize")
         out = {n: _parquet(os.path.join(out_dir, n)) for n in ("rate_limit", "multiline_count", "session_flows", "flow_reports")}
         return (
             self._diff(f"SELECT conv_id, turn_idx, role FROM {out['rate_limit']}", "SELECT * FROM o_rate")
@@ -105,12 +101,13 @@ class Oracle:
             )
             + self._diff(
                 f"SELECT conv_id, CAST(session_start AS TIMESTAMP), n_events FROM {out['session_flows']}",
-                "SELECT conv_id, CAST(ts_out AS TIMESTAMP), n_events FROM o_sess",
+                "SELECT conv_id, CAST(ts_out AS TIMESTAMP), n_events FROM o_sessionize WHERE kind = 'session'",
             )
             + self._diff(
                 f"SELECT conv_id, CAST(report_ts AS TIMESTAMP), CAST(flow_start AS TIMESTAMP), "
                 f"packets, final FROM {out['flow_reports']}",
-                "SELECT conv_id, CAST(ts_out AS TIMESTAMP), CAST(start_ts AS TIMESTAMP), n_events, final FROM o_flow",
+                "SELECT conv_id, CAST(ts_out AS TIMESTAMP), CAST(start_ts AS TIMESTAMP), n_events, final "
+                "FROM o_sessionize WHERE kind = 'flowrep'",
             )
         )
 

@@ -11,7 +11,9 @@ process and one local[k] Spark session (k = min(4, nproc)):
               and materialised SETUP_REPEATS times (setup_s = session
               start + median generation)
   cold pass   the workload's first pass in the fresh session
-  warm passes closed loop, one pass at a time, for --seconds
+  settling    SETTLE_PASSES more passes, untimed
+  warm passes closed loop, one pass at a time, for --seconds and at
+              least MIN_PASSES passes
   check       the last pass's outputs against a DuckDB recomputation,
               outside the timed region
 
@@ -40,13 +42,14 @@ from pathlib import Path
 HERE = Path(__file__).resolve().parent
 ROOT = HERE.parent
 
-TURNS = 50_000  # input turns (one per generated event)
+TURNS = 150_000  # input turns (one per generated event)
 FILES = 16  # parquet files in the transcripts table
 CORES = min(4, len(os.sched_getaffinity(0)))
 SHUFFLE_PARTITIONS = 8
 DRIVER_MEMORY = "1g"
 SETUP_REPEATS = 3
-MIN_PASSES = 3  # warm passes run even when --seconds is spent sooner
+SETTLE_PASSES = 1  # untimed warm passes after the cold one: the JIT still speeds up the next pass
+MIN_PASSES = 3  # timed warm passes run even when --seconds is spent sooner
 MIN_TRACED = 2
 
 END_TO_END = {
@@ -222,6 +225,8 @@ def bench(args, work: Path) -> tuple[dict, dict, dict, bool]:
         untraced = tracing.Untraced()
         with tracing.RssPeak() as rss:
             cold = passes.run(untraced.span)
+            for _ in range(SETTLE_PASSES):
+                passes.run(untraced.span)
             warm = passes.loop(untraced.span, args.seconds / 2 if args.trace else args.seconds, MIN_PASSES)
         if cold is None or not warm:
             raise RuntimeError("no pass succeeded")
@@ -267,7 +272,9 @@ def bench(args, work: Path) -> tuple[dict, dict, dict, bool]:
             tracer.pass_id = "stats"
             with tracer.span("stats"):
                 counts = layer_counts(wl)
+        t0 = time.perf_counter()
         mismatch = wl.check(oracle)
+        context["check_s"] = time.perf_counter() - t0
         oracle.close()
     finally:
         stop_jvm(spark)

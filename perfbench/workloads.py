@@ -6,14 +6,15 @@ from __future__ import annotations
 
 import os
 import shutil
+from unittest import mock
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from beats_spark import pipeline
 from beats_spark.aggregates import events_per_conv, events_per_tool, flow_reports, session_flows
 from beats_spark.checkpoint import CheckpointedRun
-from beats_spark.dissect import cast_column, dissect_columns
-from beats_spark.pipeline import FLAGSHIP_TOK, STEP_TOK, parse_enrich, route_events
+from beats_spark.pipeline import parse_enrich, route_events
 from beats_spark.processors.stateful import multiline_count, rate_limit
 from beats_spark.sources import read_transcripts
 from tracing import Untraced
@@ -28,13 +29,14 @@ def _part(n: int, conv_id: F.Column | None = None) -> F.Column:
     return F.pmod(F.hash(F.col("conv_id") if conv_id is None else conv_id), F.lit(n))
 
 
-def dissect_prefix(df: DataFrame) -> DataFrame:
-    """parse_enrich's stages 1-2 (dissect + convert) without the enrich
-    joins, so enrich's self time can be differenced out."""
-    df = dissect_columns(df, FLAGSHIP_TOK, src="text", flag_failures=False)
-    df = dissect_columns(df, STEP_TOK, src="msg", flag_failures=False)
-    df = df.withColumn("step_num", cast_column(F.col("step"), "long"))
-    return df.withColumn("event_ts", F.try_to_timestamp(F.col("ts_str"), F.lit("yyyy-MM-dd'T'HH:mm:ss'Z'")))
+def dissect_prefix(df: DataFrame, spark: SparkSession) -> DataFrame:
+    """parse_enrich with its enrich joins left out, so enrich's self time
+    can be differenced out. The plan is the program's own: parse_enrich
+    is called with the `lookup_join` it uses swapped for a pass-through
+    while the lazy plan is built. The self-test checks that the result
+    has no join and lacks only the lookup tables' columns."""
+    with mock.patch.object(pipeline, "lookup_join", lambda *a, **k: (lambda d: d), create=True):
+        return parse_enrich(df, spark)
 
 
 class Fanout:
@@ -61,7 +63,7 @@ class Fanout:
         scan = self.scan()
         return [
             ("sources.scan", scan),
-            ("dissect", dissect_prefix(scan)),
+            ("dissect", dissect_prefix(scan, self.spark)),
             ("processors.enrich", parse_enrich(scan, self.spark)),
             ("routing", route_events(parse_enrich(scan, self.spark))),
         ]
