@@ -16,6 +16,9 @@ process and one local[k] Spark session (k = min(4, nproc)):
               least MIN_PASSES passes
   check       the last pass's outputs against a DuckDB recomputation,
               outside the timed region
+  clean-up    the JVM stopped, and every process the run started (the
+              JVM's Python workers too) waited for before the result
+              is printed
 
 BENCHMARK.json lists fanout and stateful; resume runs the same way on
 request. With --trace 0 the last stdout line carries the end-to-end
@@ -34,6 +37,7 @@ import argparse
 import json
 import os
 import shutil
+import signal
 import sys
 import time
 import traceback
@@ -198,6 +202,47 @@ def stop_jvm(spark) -> None:
         proc.stdin.close()
         proc.wait(timeout=60)
     SparkContext._gateway = SparkContext._jvm = None
+
+
+PR_SET_CHILD_SUBREAPER = 36
+
+
+def adopt_orphans() -> None:
+    """Make this process the subreaper of everything it starts, so a
+    process whose parent ends first (Spark's Python worker daemon outlives
+    the JVM for a moment) is re-parented here, not to init, and can be
+    waited for."""
+    import ctypes
+
+    libc = ctypes.CDLL(None, use_errno=True)
+    if libc.prctl(PR_SET_CHILD_SUBREAPER, 1, 0, 0, 0) != 0:
+        raise OSError(ctypes.get_errno(), "prctl(PR_SET_CHILD_SUBREAPER) failed")
+
+
+def reap_descendants(grace: float = 30.0) -> None:
+    """Return once no process this run started is left: reap those that
+    have ended, kill those still running after `grace` seconds."""
+    import tracing
+
+    me, deadline = os.getpid(), time.monotonic() + grace
+    while True:
+        try:
+            while os.waitpid(-1, os.WNOHANG)[0] > 0:
+                pass
+        except ChildProcessError:
+            pass
+        left = tracing.descendants(me)
+        if not left:
+            return
+        if time.monotonic() > deadline + grace:
+            raise RuntimeError(f"processes {left} did not end")
+        if time.monotonic() > deadline:
+            for pid in left:
+                try:
+                    os.kill(pid, signal.SIGKILL)
+                except ProcessLookupError:
+                    pass
+        time.sleep(0.05)
 
 
 def bench(args, work: Path) -> tuple[dict, dict, dict, bool]:
@@ -409,9 +454,11 @@ def main(argv: list[str] | None = None) -> int:
     os.environ["SPARK_LAUNCHER_OPTS"] = jvm_scratch_opts(work)  # spark-submit's launcher JVM
     sys.dont_write_bytecode = True
     sys.path[:0] = [str(ROOT), str(HERE)]
+    adopt_orphans()
     try:
         e2e, layers, context, correct = bench(args, work)
     finally:
+        reap_descendants()
         shutil.rmtree(work, ignore_errors=True)
 
     print("# " + json.dumps(context))

@@ -1,8 +1,8 @@
 """Self-test of the benchmark: every workload once at a tiny input size,
-untraced and traced, the dissect prefix against parse_enrich, and the
-refusal to run without the sources. It makes six benchmark runs and
-starts one Spark session of its own, about five minutes on a 4-vCPU
-machine, so it is marked slow.
+untraced and traced, leaving no process behind, the dissect prefix
+against parse_enrich, and the refusal to run without the sources. It
+makes six benchmark runs and starts one Spark session of its own, about
+five minutes on a 4-vCPU machine, so it is marked slow.
 
     python3 -m pytest perfbench/test_perfbench.py -q
 """
@@ -64,12 +64,29 @@ ZERO = {
 }
 
 
+def session_members(sid: int) -> list[int]:
+    """Live processes of session `sid`, from /proc."""
+    out = []
+    for d in Path("/proc").iterdir():
+        try:
+            stat = (d / "stat").read_text()
+        except (OSError, ValueError):
+            continue
+        if d.name.isdigit() and int(stat[stat.rindex(")") + 2 :].split()[3]) == sid:
+            out.append(int(d.name))
+    return out
+
+
 def run(cwd: Path, workload: str, trace: int) -> subprocess.CompletedProcess:
-    return subprocess.run(
-        [sys.executable, str(cwd / "perfbench" / "run.py"), "--workload", workload, "--seed", "3",
-         "--seconds", "1", "--trace", str(trace), "--turns", "10000"],
-        cwd=cwd, capture_output=True, text=True, timeout=600,
-    )
+    """One benchmark run in a session of its own; asserts that no process
+    of that session outlives it."""
+    cmd = [sys.executable, str(cwd / "perfbench" / "run.py"), "--workload", workload, "--seed", "3",
+           "--seconds", "1", "--trace", str(trace), "--turns", "10000"]
+    with subprocess.Popen(cmd, cwd=cwd, stdout=subprocess.PIPE, stderr=subprocess.PIPE, text=True,
+                          start_new_session=True) as p:
+        out, err = p.communicate(timeout=600)
+    assert session_members(p.pid) == [], "processes left running after the run"
+    return subprocess.CompletedProcess(cmd, p.returncode, out, err)
 
 
 @pytest.mark.parametrize("trace", [0, 1])

@@ -6,9 +6,10 @@ from __future__ import annotations
 
 import contextlib
 import json
-import multiprocessing as mp
 import os
 import statistics
+import subprocess
+import sys
 import threading
 import time
 from collections import defaultdict
@@ -157,6 +158,28 @@ def _read(path: str) -> bytes:
         return b""
 
 
+def _children() -> dict[int, list[int]]:
+    """Every live process's children, from /proc."""
+    kids: dict[int, list[int]] = defaultdict(list)
+    for d in os.listdir("/proc"):
+        if d.isdigit():
+            s = _read(f"/proc/{d}/stat")
+            if s:
+                kids[int(s[s.rindex(b")") + 2 :].split()[1])].append(int(d))
+    return kids
+
+
+def descendants(root: int) -> list[int]:
+    """Pids of every live descendant of `root`."""
+    kids, out = _children(), []
+    todo = list(kids[root])
+    while todo:
+        pid = todo.pop()
+        out.append(pid)
+        todo.extend(kids[pid])
+    return out
+
+
 def tree_rss_bytes(root: int) -> int:
     """Resident memory of every descendant of `root` (the driver JVM and
     the Python workers it forks), read from /proc.
@@ -165,12 +188,7 @@ def tree_rss_bytes(root: int) -> int:
     commands) still shows the JVM's command line and, sharing its
     address space, the JVM's resident pages; it is skipped so those
     pages are not counted twice."""
-    kids: dict[int, list[int]] = defaultdict(list)
-    for d in os.listdir("/proc"):
-        if d.isdigit():
-            s = _read(f"/proc/{d}/stat")
-            if s:
-                kids[int(s[s.rindex(b")") + 2 :].split()[1])].append(int(d))
+    kids = _children()
     total, todo = 0, [(pid, b"") for pid in kids[root]]
     page = os.sysconf("SC_PAGE_SIZE")
     while todo:
@@ -215,18 +233,40 @@ def _burn(n: int) -> int:
     return x
 
 
+# one burn in a child process: says it is ready, waits for a line on
+# stdin, then prints the monotonic clock (system-wide on Linux) before
+# and after the burn
+_BURN_CHILD = """
+import sys, time
+from tracing import _burn
+print("ready", flush=True)
+sys.stdin.readline()
+t0 = time.monotonic()
+_burn({iters})
+print(t0, time.monotonic())
+"""
+
+
 def cpu_calibration(procs: int, iters: int = 1_000_000) -> dict:
     """Pure-Python CPU burn, alone and on `procs` processes at once: the
-    machine's effective parallel capacity, reported as context."""
+    machine's effective parallel capacity, reported as context. The child
+    processes are waited for before it returns."""
     t0 = time.perf_counter()
     _burn(iters)
     single = time.perf_counter() - t0
-    ctx = mp.get_context("spawn")
-    with ctx.Pool(procs) as pool:
-        pool.map(_burn, [1] * procs)  # workers started and imported
-        t0 = time.perf_counter()
-        pool.map(_burn, [iters] * procs)
-        wall = time.perf_counter() - t0
-        pool.close()
-        pool.join()
+    cmd = [sys.executable, "-B", "-c", _BURN_CHILD.format(iters=iters)]
+    env = {**os.environ, "PYTHONPATH": os.path.dirname(os.path.abspath(__file__))}
+    kids = [subprocess.Popen(cmd, stdin=subprocess.PIPE, stdout=subprocess.PIPE, text=True, env=env) for _ in range(procs)]
+    try:
+        for k in kids:
+            k.stdout.readline()
+        for k in kids:  # every child has started; go
+            k.stdin.write("\n")
+            k.stdin.flush()
+        spans = [tuple(map(float, k.communicate()[0].split())) for k in kids]
+    finally:
+        for k in kids:
+            k.kill()
+            k.wait()
+    wall = max(end for _, end in spans) - min(start for start, _ in spans)
     return {"single_proc_s": round(single, 4), f"effective_cores_at_{procs}": round(procs * single / wall, 2)}
