@@ -1232,6 +1232,7 @@ def q_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     multiprobe ANN ranks (plane-literal oracle), kind='neardup' rows the
     capped-bucket embedding near-dup pairs. Both share the SRP bucketing
     machinery; each keeps its full value-level oracle."""
+    from beats_spark.datapipe.dedup import _track
     from beats_spark.datapipe.similarity import embedding_near_dupes, lsh_bucket_topk
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
@@ -1244,13 +1245,16 @@ def q_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # threshold tuned to the synthetic embedding distribution (64-dim,
     # near-orthogonal): 0.3 yields a meaningful non-empty pair set.
-    dupes = embedding_near_dupes(emb, threshold=0.3, p_bits=6, dim=64, tables=2).select(
+    near = embedding_near_dupes(emb, threshold=0.3, p_bits=6, dim=64, tables=2)
+    dupes = near.select(
         F.lit("neardup").alias("kind"),
         F.col("id_a").alias("a"),
         F.col("id_b").alias("b"),
         F.lit(0).cast("bigint").alias("val"),
     )
-    return topk.unionByName(dupes)
+    # the select and the union both drop near's persisted-frame
+    # ownership; re-track it so release_intermediates(result) frees it
+    return _track(topk.unionByName(dupes), inherit=[near])
 
 
 def q_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:

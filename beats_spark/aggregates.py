@@ -69,15 +69,6 @@ def session_flows(
     )
 
 
-def pipeline_metrics(df: DataFrame) -> DataFrame:
-    """Monitoring counters analog (pipeline/monitoring.go:87-113):
-    events.total / published-per-sink / flagged."""
-    return df.groupBy(SINK_COL).agg(
-        F.count(F.lit(1)).alias("events_total"),
-        F.sum(F.when(F.size(F.col("log_flags")) > 0, 1).otherwise(0)).alias("events_flagged"),
-    )
-
-
 class FlowConfigError(ValueError):
     """ErrInvalidTimeout / ErrInvalidPeriod (packetbeat/flows/flows.go)."""
 

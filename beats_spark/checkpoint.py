@@ -8,28 +8,28 @@ Reference semantics being reproduced (SURVEY.md §1.2, §3.3):
     input is re-read (registrar.go:96-106).
 
 Spark re-expression: the unit of progress is a deterministic input
-partition. Two units are supported:
-  * partition_expr="hash" (default): pmod(hash(conv_id), N). Resume
-    re-filters the derived column — one full input scan on resume, no
-    scan pruning (fine locally; the honest fallback when the input has
-    no physical layout).
-  * partition_expr="days": the unit is the calendar day of `ts` — the
-    same unit as Iceberg's days(ts) hidden partitioning. When the input
-    table is physically partitioned by day (pass `day_col`, e.g. a
-    `date=YYYY-MM-DD` directory column; on real Iceberg the ts filter
-    itself prunes), the resume filter `_part IN missing` reaches the
-    scan as a PartitionFilter, so a resumed run READS ONLY THE
-    MISSING DAYS' FILES — at 100 TB this is the difference between
-    re-scanning a day and re-scanning the table.
+partition, derived from the input:
+  * without `day_col`: pmod(hash(conv_id), N). Resume re-filters the
+    derived column — one full input scan on resume, no scan pruning
+    (the honest fallback when the input has no physical layout).
+  * with `day_col`: the unit is that column's value — e.g. a
+    `date=YYYY-MM-DD` directory column of a day-partitioned input, the
+    analog of Iceberg's days(ts) hidden partitioning. The resume filter
+    `_part IN missing` then reaches the scan as a PartitionFilter, so a
+    resumed run READS ONLY THE MISSING DAYS' FILES — at 100 TB this is
+    the difference between re-scanning a day and re-scanning the table.
+    A caller that wants days from `ts` adds that column and passes it.
 
-A run executes ONE write job over all missing partitions —
-`write.partitionBy("_part", SINK_COL)` with DYNAMIC partition
-overwrite, so the input is scanned exactly once regardless of N (a
-per-partition loop would rescan the input N times: 6.4 PB of reads for
-a 100 TB table at N=64). Completed partitions' directories are never
-touched. Per-partition manifests carrying lineage + throughput metrics
-are then derived from the *written* output (a footer-cheap read of the
-new files, not a re-run of the pipeline):
+This is the engine's one batch fan-out writer. A run executes ONE write
+job over all missing partitions — `write.partitionBy("_part", SINK_COL)`
+with DYNAMIC partition overwrite and no shuffle (each input task writes
+its own file per (_part, sink)), so the input is scanned exactly once
+regardless of N (a per-partition loop would rescan it N times: 6.4 PB
+of reads for a 100 TB table at N=64) and a hot key's rows spread over
+as many files as the input has tasks. Completed partitions' directories are never touched.
+Per-partition manifests carrying lineage + throughput metrics are then
+derived from the *written* output (a footer-cheap read of the new
+files, not a re-run of the pipeline) and committed one by one:
   {partition, input_files, rows_in, rows_per_sink, bytes, wall_ms}
 
 A resume run diffs existing manifests against the partition list and
@@ -38,10 +38,9 @@ them). Task-level retry inside the job is Spark's; partition-level
 idempotence comes from the dynamic overwrite — together they upgrade
 Beats' at-least-once to effectively-once per partition.
 
-`fail_after=k` (kill/resume tests) forces one-partition-at-a-time
-commits so a failure can be injected between manifest commits; that
-path re-filters the input per batch and exists only for fault
-injection, not production use.
+`fail_after=k` (kill/resume tests) raises after the k-th manifest
+commit: the data is written, the remaining manifests are not — the
+"kill after partition k" case.
 """
 
 from __future__ import annotations
@@ -57,26 +56,23 @@ from .events import SINK_COL
 
 
 class CheckpointedRun:
-    def __init__(
-        self,
-        out_dir: str,
-        n_partitions: int = 8,
-        partition_expr: str = "hash",
-        ts_col: str = "ts",
-        day_col: str | None = None,
-    ):
-        if partition_expr not in ("hash", "days"):
-            raise ValueError(f"partition_expr must be 'hash' or 'days', got {partition_expr!r}")
+    def __init__(self, out_dir: str, n_partitions: int = 8, day_col: str | None = None):
         self.out_dir = out_dir
-        self.n_partitions = n_partitions
-        self.partition_expr = partition_expr
-        self.ts_col = ts_col
+        self.n_partitions = n_partitions  # hash units; unused with day_col
         self.day_col = day_col
         self.manifest_dir = os.path.join(out_dir, "_manifests")
         self.sinks_dir = os.path.join(out_dir, "sinks")
         os.makedirs(self.manifest_dir, exist_ok=True)
         self.write_jobs = 0  # write jobs executed by the last run() call
-        self.last_plan = ""  # physical plan of the last write's input (audit)
+        self._last_written: DataFrame | None = None
+
+    @property
+    def last_plan(self) -> str:
+        """Physical plan of the last write's input (audit), rendered only
+        when read — planning it on every run() would cost the write path."""
+        if self._last_written is None:
+            return ""
+        return self._last_written._jdf.queryExecution().executedPlan().toString()
 
     def _manifest_path(self, p) -> str:
         name = f"part-{p:05d}" if isinstance(p, int) else f"part-{p}"
@@ -90,8 +86,8 @@ class CheckpointedRun:
                     with open(os.path.join(self.manifest_dir, f)) as fh:
                         m = json.load(fh)
                     # JSON round-trips the partition id's type (int for
-                    # hash mode, str for days mode) — no coercion, so a
-                    # digit-valued day string never aliases an int id
+                    # hash units, str for day_col units) — no coercion, so
+                    # a digit-valued day string never aliases an int id
                     done.add(m["partition"])
                 except (json.JSONDecodeError, KeyError):
                     continue  # torn write ⇒ not committed ⇒ recompute
@@ -139,27 +135,22 @@ class CheckpointedRun:
         return out
 
     def _part_column(self) -> F.Column:
-        if self.partition_expr == "days":
-            if self.day_col:
-                # physical day-partition column of the input (dir-level
-                # pruning on resume; Iceberg's days(ts) analog)
-                return F.col(self.day_col).cast("string")
-            return F.date_format(F.col(self.ts_col), "yyyy-MM-dd")
+        if self.day_col:
+            return F.col(self.day_col).cast("string")
         return F.pmod(F.hash(F.col("conv_id")), F.lit(self.n_partitions))
 
     def _all_partitions(self, routed: DataFrame) -> list:
-        if self.partition_expr == "hash":
+        if not self.day_col:
             return list(range(self.n_partitions))
         # partition inventory: metadata-only on Iceberg (hidden days(ts)
-        # partitioning); a single column-pruned scan of the day/ts column
-        # on raw parquet (day-partition dirs make it a pure file listing).
+        # partitioning); a single column-pruned scan of the day column on
+        # raw parquet (day-partition dirs make it a pure file listing).
         parts = [r["_part"] for r in routed.select("_part").distinct().collect()]
         if any(p is None for p in parts):
             raise ValueError(
-                "days-mode checkpoint: input contains rows with a NULL "
-                f"day ({self.day_col or self.ts_col}) — filter or default "
-                "them before run(); a NULL partition id has no manifest/"
-                "directory representation"
+                f"day-unit checkpoint: input contains rows with a NULL {self.day_col} "
+                "— filter or default them before run(); a NULL partition id has no "
+                "manifest/directory representation"
             )
         return sorted(parts)
 
@@ -169,11 +160,12 @@ class CheckpointedRun:
         input_files: list[str],
         fail_after: int | None = None,
     ) -> list[dict]:
-        """Process all missing partitions in ONE write job; resume-safe.
+        """Write all missing partitions in ONE job, then commit their
+        manifests one by one; resume-safe.
 
-        `routed` must contain conv_id + SINK_COL (+ ts/day_col in days
-        mode). `fail_after=k` aborts after k manifests are committed
-        (kill/resume tests; forces single-partition batches).
+        `routed` must contain conv_id + SINK_COL (+ day_col when set).
+        `fail_after=k` raises after the k-th manifest commit (kill/resume
+        tests).
         """
         spark = routed.sparkSession
         routed = routed.withColumn("_part", self._part_column())
@@ -183,56 +175,48 @@ class CheckpointedRun:
         self.write_jobs = 0
         if not missing:
             return []
-        # fault-injection path commits one partition at a time; the
-        # production path is a single batch = a single input scan.
-        batches = [[p] for p in missing] if fail_after is not None else [missing]
+        t0 = time.perf_counter()
+        df = routed
+        if len(missing) < len(all_parts):
+            # over a day-partitioned input this filter reaches the scan as
+            # a PartitionFilter → only missing days' files are read
+            # (asserted in tests via last_plan)
+            df = df.filter(F.col("_part").isin(missing))
+        self._last_written = df
+        (
+            df.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("_part", SINK_COL)
+            .parquet(self.sinks_dir)
+        )
+        self.write_jobs = 1
+        wall_ms = round((time.perf_counter() - t0) * 1000)
+        counts = self._written_counts(spark, missing)
+        total_rows = sum(sum(c.values()) for c in counts.values())
         manifests = []
-        processed = 0
-        for batch in batches:
-            t0 = time.perf_counter()
-            df = routed
-            if len(batch) < len(all_parts):
-                # days mode over a day-partitioned input: this filter
-                # reaches the scan as a PartitionFilter → only missing
-                # days' files are read (asserted in tests via last_plan)
-                df = df.filter(F.col("_part").isin(batch))
-            self.last_plan = df._jdf.queryExecution().executedPlan().toString()
-            (
-                df.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("_part", SINK_COL)
-                .parquet(self.sinks_dir)
-            )
-            self.write_jobs += 1
-            wall_ms = round((time.perf_counter() - t0) * 1000)
-            counts = self._written_counts(spark, batch)
-            batch_rows = sum(sum(c.values()) for c in counts.values())
-            for p in batch:
-                per_sink = counts.get(p, {})
-                rows_in = sum(per_sink.values())
-                # wall time of the shared job apportioned by row share —
-                # manifests stay comparable across single- and multi-
-                # partition batches.
-                share = rows_in / batch_rows if batch_rows else 1.0 / len(batch)
-                p_wall = max(1, round(wall_ms * share))
-                manifest = {
-                    "partition": p,
-                    "input_files": input_files,
-                    "rows_in": rows_in,
-                    "rows_per_sink": per_sink,
-                    "bytes": self._partition_bytes(p),
-                    "wall_ms": p_wall,
-                    "throughput_rows_per_sec": round(rows_in / max(p_wall, 1) * 1000, 1),
-                }
-                # Atomic commit: manifest appears only after the data is down.
-                tmp = self._manifest_path(p) + ".tmp"
-                with open(tmp, "w") as fh:
-                    json.dump(manifest, fh)
-                os.replace(tmp, self._manifest_path(p))
-                manifests.append(manifest)
-                processed += 1
-                if fail_after is not None and processed >= fail_after:
-                    raise RuntimeError(f"injected failure after {processed} partitions")
+        for p in missing:
+            per_sink = counts[p]
+            rows_in = sum(per_sink.values())
+            # wall time of the shared job apportioned by row share
+            share = rows_in / total_rows if total_rows else 1.0 / len(missing)
+            p_wall = max(1, round(wall_ms * share))
+            manifest = {
+                "partition": p,
+                "input_files": input_files,
+                "rows_in": rows_in,
+                "rows_per_sink": per_sink,
+                "bytes": self._partition_bytes(p),
+                "wall_ms": p_wall,
+                "throughput_rows_per_sec": round(rows_in / max(p_wall, 1) * 1000, 1),
+            }
+            # Atomic commit: manifest appears only after the data is down.
+            tmp = self._manifest_path(p) + ".tmp"
+            with open(tmp, "w") as fh:
+                json.dump(manifest, fh)
+            os.replace(tmp, self._manifest_path(p))
+            manifests.append(manifest)
+            if fail_after is not None and len(manifests) >= fail_after:
+                raise RuntimeError(f"injected failure after {len(manifests)} partitions")
         return manifests
 
     def read_output(self, spark: SparkSession) -> DataFrame:

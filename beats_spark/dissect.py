@@ -418,33 +418,15 @@ class Dissector:
                     parts.append(".*$")
         return "(?s)" + "".join(parts)
 
-    def column_plan(self, col: Column, strategy: str = "extract") -> tuple[Column, dict[str, Column]] | None:
-        """(matched_predicate, {key: string Column}) — pure-Catalyst plan.
-
-        strategy='extract': one regexp_extract per key (k+1 regex passes).
-        strategy='packed': ONE regexp_replace packs all groups into a
-        \\x1f-separated string, then split — 2 regex passes total
-        regardless of key count (wins when k is large)."""
+    def column_plan(self, col: Column) -> tuple[Column, dict[str, Column]] | None:
+        """(matched_predicate, {key: string Column}) — pure-Catalyst plan:
+        one regexp_extract per key (k+1 regex passes; measured fastest at
+        all key counts on JVM regex)."""
         pattern = self.regex_pattern()
         if pattern is None:
             return None
         matched = col.rlike(pattern)
         out: dict[str, Column] = {}
-        if strategy == "packed":
-            n_groups = len(self.fields)
-            # Java replacement syntax: numbered refs are $1..$n (the ${name}
-            # form is for NAMED groups only and errors on digits).
-            repl = "\x1f".join(f"${i}" for i in range(1, n_groups + 1))
-            packed = F.split(F.regexp_replace(col, pattern, repl), "\x1f", -1)
-            group = 0
-            for f in self.fields:
-                group += 1
-                if f.kind == SKIP:
-                    continue
-                v = packed.getItem(group - 1)
-                v = self._trim_col(v)
-                out[f.key] = v
-            return matched, out
         group = 0
         for f in self.fields:
             group += 1
@@ -741,7 +723,6 @@ def dissect_columns(
     flag_failures: bool = True,
     trim_values: str | None = None,
     trim_chars: str = " ",
-    strategy: str = "extract",
     overwrite_keys: bool = False,
     convert_types: bool = True,
 ) -> DataFrame:
@@ -751,9 +732,6 @@ def dissect_columns(
     path — stays inside WholeStageCodegen); otherwise an Arrow-batched
     struct UDF. Parse failure ⇒ NULL columns + `dissect_parsing_error`
     appended to log_flags (processor.go:107-117 semantics).
-    `strategy` tunes the fast path: 'extract' (k regex passes, measured
-    fastest at all key counts on JVM regex) vs 'packed' (2 passes via
-    replace+split, kept as an alternative).
 
     Processor-level semantics (processor.go:83-105, r5 matrix port):
       * `prefix` is the target_prefix analog under the engine's flat
@@ -785,7 +763,7 @@ def dissect_columns(
         return cast_column(v, types[k]) if k in types else v
 
     col = F.col(src)
-    plan = d.column_plan(col, strategy=strategy)
+    plan = d.column_plan(col)
     if plan is not None:
         matched, cols = plan
         # errEmpty parity: an empty input string is a parse failure even if

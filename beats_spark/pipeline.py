@@ -123,12 +123,3 @@ def flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full routed event stream (one row per surviving turn, with sink)."""
     t = synth.transcripts(spark, sf_dir)
     return route_events(parse_enrich(t, spark))
-
-
-def flagship_aggregates(routed: DataFrame) -> dict[str, DataFrame]:
-    from .aggregates import events_per_conv, events_per_tool
-
-    return {
-        "events_per_conv": events_per_conv(routed),
-        "events_per_tool": events_per_tool(routed),
-    }

@@ -7,7 +7,7 @@ timeseries   processors/timeseries (instance hash of dimensions)
 Batch semantics: the token bucket's steady state admits `limit` events
 per period per key; the batch analog is row_number() over
 (key, time-bucket) ≤ limit in arrival (ts, turn_idx) order. The
-streaming variant (transformWithState) reuses the same keying.
+streaming variant (streaming/rate_limit.py) reuses the same keying.
 
 Scale notes:
   * rate_limit is skew-safe via Spark's WindowGroupLimit (see its
@@ -54,7 +54,6 @@ def rate_limit(
     period: str = "1 minute",
     ts_col: str = "ts",
     order_cols: list[str] | None = None,
-    salt_buckets: int = 16,
 ):
     """Keep at most `limit` events per key per period-bucket; drop the rest.
 
@@ -69,7 +68,7 @@ def rate_limit(
     bounded set — the same bound the r5 two-phase salted form achieved,
     without its extra exchange (on a table not already partitioned by
     `key`, the salted window shuffled the full input TWICE) and extra
-    sort. `salt_buckets` is kept for API compatibility and ignored.
+    sort.
     """
     if isinstance(limit, str):
         import re

@@ -1,21 +1,21 @@
-"""Routing / output fan-out — the Beats output layer as a partitioned write.
+"""Routing — the Beats output layer's per-event sink choice as a Column.
 
 The reference evaluates the selector per event and groups bulk requests
 per sink (elasticsearch.go:144-166); we evaluate the selector as ONE
-Column and fan out with a single `partitionBy(_sink)` write — one pass,
-one shuffle-free write (file-per-sink-per-task), Iceberg/Hive-style
-partition layout so downstream readers partition-prune by sink.
+Column (`route`). The batch fan-out itself is `CheckpointedRun.run`
+(checkpoint.py): a single shuffle-free `partitionBy("_part", _sink)`
+write — one pass, file-per-sink-per-task, Iceberg/Hive-style partition
+layout so downstream readers partition-prune by sink.
 
-Skew: hot conversations (one conv = 5% of rows) would make one output
-file/task giant. `salted_repartition` spreads a hot key over S buckets
-while keeping turn-order recoverable via (conv_id, turn_idx) sort keys —
-the explicit skew handling the north rule requires (kafka's hash
-partitioner, partition.go:114-143, hotspots instead).
+Skew: with no shuffle before the write a hot conversation (5% of rows)
+spreads over as many files as the input has tasks. For writes that DO
+shuffle on the key, `salted_repartition` spreads a hot key over S
+buckets while keeping turn-order recoverable via (conv_id, turn_idx)
+sort keys (kafka's hash partitioner, partition.go:114-143, hotspots
+instead).
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -180,51 +180,6 @@ def kafka_partitioner(
         cols = [F.col(c) for c in (fields or ["conv_id", "turn_idx"])]
         return df.repartition(n_partitions, F.xxhash64(*cols))
     raise ValueError(f"kafka_partitioner: unknown mode {mode!r}")
-
-
-def write_sinks(
-    df: DataFrame,
-    out_dir: str,
-    fmt: str = "parquet",
-    mode: str = "overwrite",
-    salt_buckets: int = 16,
-) -> dict[str, int]:
-    """Fan out routed rows to per-sink partitions; returns per-sink counts.
-
-    Idempotence: `overwrite` of the static sink partitions replaces prior
-    output — re-running a failed job converges to the same bytes
-    (replaces Beats' at-least-once retry with effectively-once, §3.1).
-    """
-    routed = df.filter(F.col(SINK_COL).isNotNull())
-    # Explicit partition count: a column-only repartition is subject to
-    # AQE partition coalescing, which at small volumes collapses the
-    # salted exchange back to ONE task and silently undoes the skew
-    # spreading on disk. An explicit N pins the layout.
-    n_parts = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    salted = salted_repartition(routed, "conv_id", salt_buckets, num_partitions=max(n_parts, salt_buckets))
-    (
-        salted.write.mode(mode)
-        .format(fmt)
-        .partitionBy(SINK_COL)
-        .option("partitionOverwriteMode", "dynamic")
-        .save(os.path.join(out_dir, "sinks"))
-    )
-    # derive counts from the written table — recounting `routed` would
-    # execute the full upstream plan a second time
-    written = df.sparkSession.read.format(fmt).load(os.path.join(out_dir, "sinks"))
-    counts = {
-        r[SINK_COL]: r["cnt"]
-        for r in written.groupBy(SINK_COL).agg(F.count("*").alias("cnt")).collect()
-    }
-    return counts
-
-
-def read_sink(spark, out_dir: str, sink: str, fmt: str = "parquet") -> DataFrame:
-    return (
-        spark.read.format(fmt)
-        .load(os.path.join(out_dir, "sinks"))
-        .filter(F.col(SINK_COL) == sink)
-    )
 
 
 def kafka_topic_selector(cfg: dict) -> "Selector":

@@ -12,7 +12,7 @@ fmtstr.EventFormatString (libbeat/common/fmtstr/formatevents.go:39-121):
   * `mappings` re-keys the evaluated template through a literal dict.
 
 Compiled on the driver into one nested CASE WHEN Column — evaluated by
-Catalyst inside codegen, fanned out later by routing.write_sinks. This is
+Catalyst inside codegen, fanned out later by CheckpointedRun.run. This is
 the "which index/topic does each event go to" query of Beats, as a column.
 """
 

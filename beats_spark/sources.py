@@ -36,10 +36,7 @@ def read_transcripts(
     before any task launches (the at-scale equivalent of "only harvest
     files that changed").
     """
-    if fmt == "iceberg":
-        df = spark.read.format("iceberg").load(path_or_table)
-    else:
-        df = spark.read.format(fmt).load(path_or_table)
+    df = spark.read.format(fmt).load(path_or_table)
     if since_ts:
         df = df.filter(F.col("ts") >= F.lit(since_ts).cast("timestamp"))
     if until_ts:

@@ -8,12 +8,8 @@ one token, depleted ⇒ drop. State lives in the Structured Streaming
 state store (checkpointed, resumable — the same guarantee surface as
 the reference's in-memory buckets + registry, but fault tolerant).
 
-Two engine bindings over the SAME drain logic (_drain_token_bucket):
-  * rate_limit_stream — applyInPandasWithState (default; runs on this
-    image's PySpark, no extra deps). VERDICT r3 item 3.
-  * rate_limit_stream_tws — transformWithStateInPandas (newer state API;
-    requires the `protobuf` package for its state-server protocol, which
-    this image lacks — gated with a loud error).
+The engine binding is rate_limit_stream (applyInPandasWithState, no
+extra deps); the drain itself is the pure _drain_token_bucket.
 
 Scale: state is O(#distinct keys) × 16 bytes; each micro-batch shuffles
 once on the key (the same partitioning the state store uses), and the
@@ -26,12 +22,6 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-from pyspark.sql.types import (
-    DoubleType,
-    StructField,
-    StructType,
-)
 
 
 def _sort_deterministic(pdf: pd.DataFrame, ts_col: str) -> pd.DataFrame:
@@ -81,49 +71,6 @@ def _drain_token_bucket(
         else:
             keep.append(False)
     return keep, tokens, last_epoch
-
-
-class TokenBucketProcessor(StatefulProcessor):
-    """Per-key token bucket over event-time (token_bucket.go semantics)."""
-
-    def __init__(self, limit: int, period_seconds: float, ts_col: str = "ts"):
-        self.limit = float(limit)
-        self.period = float(period_seconds)
-        self.ts_col = ts_col
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        state_schema = StructType(
-            [
-                StructField("tokens", DoubleType(), True),
-                StructField("last_epoch", DoubleType(), True),
-            ]
-        )
-        self.bucket = handle.getValueState("bucket", state_schema)
-
-    def handleInputRows(self, key, rows: Iterator[pd.DataFrame], timerValues) -> Iterator[pd.DataFrame]:
-        if self.bucket.exists():
-            tokens, last_epoch = self.bucket.get()
-        else:
-            tokens, last_epoch = self.limit, None
-        # concatenate ALL chunks before draining: per-chunk draining
-        # threads bucket state across chunks in ARRIVAL order, which
-        # varies across task re-attempts — the whole micro-batch must be
-        # one deterministically-ordered drain (r4 review pass 2)
-        chunks = [p for p in rows if len(p)]
-        if chunks:
-            pdf = pd.concat(chunks) if len(chunks) > 1 else chunks[0]
-            pdf = _sort_deterministic(pdf, self.ts_col)
-            epochs = pdf[self.ts_col].astype("int64") / 1e9
-            keep, tokens, last_epoch = _drain_token_bucket(
-                epochs, tokens, last_epoch, self.limit, self.period
-            )
-            kept = pdf[pd.Series(keep, index=pdf.index)]
-            if len(kept):
-                yield kept
-        self.bucket.update((float(tokens), float(last_epoch) if last_epoch is not None else None))
-
-    def close(self) -> None:
-        pass
 
 
 def rate_limit_stream(
@@ -248,35 +195,4 @@ def rate_limit_stream(
         timeoutConf=(
             GroupStateTimeout.ProcessingTimeTimeout if has_wm else GroupStateTimeout.NoTimeout
         ),
-    )
-
-
-def rate_limit_stream_tws(
-    df: DataFrame,
-    key_fields: list[str],
-    limit: int,
-    period_seconds: float = 60.0,
-    ts_col: str = "ts",
-) -> DataFrame:
-    """transformWithStateInPandas binding of the same bucket.
-
-    Runtime gate: transformWithStateInPandas speaks a protobuf state
-    protocol to the JVM; this container ships pyspark without the
-    `protobuf` package, so this path cannot execute here — use
-    rate_limit_stream (applyInPandasWithState, same semantics) instead.
-    """
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError as e:
-        raise NotImplementedError(
-            "rate_limit_stream_tws requires the 'protobuf' package for "
-            "Spark's transformWithState state protocol; not available in "
-            "this runtime — use rate_limit_stream (applyInPandasWithState)"
-        ) from e
-    proc = TokenBucketProcessor(limit, period_seconds, ts_col)
-    return df.groupBy(*key_fields).transformWithStateInPandas(
-        statefulProcessor=proc,
-        outputStructType=df.schema,
-        outputMode="Append",
-        timeMode="None",
     )

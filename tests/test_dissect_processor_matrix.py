@@ -96,7 +96,7 @@ def _run(spark, tokenizer, kwargs, message, force_udf, monkeypatch, extra_cols=N
         [tuple(cols.values())], ", ".join(f"`{c}` string" for c in cols)
     )
     if force_udf:
-        monkeypatch.setattr(Dissector, "column_plan", lambda self, col, strategy="extract": None)
+        monkeypatch.setattr(Dissector, "column_plan", lambda self, col: None)
     return dissect_columns(df, tokenizer, **kwargs)
 
 
@@ -159,7 +159,7 @@ def test_field_already_exist_refuses(spark, prefix, existing):
 def test_overwrite_keys_true_overwrites(spark, monkeypatch, force_udf):
     df = spark.createDataFrame([("hello world", 42)], "text string, key int")
     if force_udf:
-        monkeypatch.setattr(Dissector, "column_plan", lambda self, col, strategy="extract": None)
+        monkeypatch.setattr(Dissector, "column_plan", lambda self, col: None)
     out = dissect_columns(df, "hello %{key}", overwrite_keys=True).first()
     assert out.key == "world"
     assert out.text == "hello world"
@@ -175,7 +175,7 @@ def test_error_flagging(spark, monkeypatch, force_udf):
         [("hello world",), ("something completely different",)], "text string"
     )
     if force_udf:
-        monkeypatch.setattr(Dissector, "column_plan", lambda self, col, strategy="extract": None)
+        monkeypatch.setattr(Dissector, "column_plan", lambda self, col: None)
     rows = {r.text: r for r in dissect_columns(df, "hello %{key}").collect()}
     good = rows["hello world"]
     bad = rows["something completely different"]
@@ -188,7 +188,7 @@ def test_processor_convert_typed_capture(spark, monkeypatch, force_udf):
     """TestProcessorConvert: %{user_id|integer} lands as int32."""
     df = spark.createDataFrame([("userid=7736",)], "text string")
     if force_udf:
-        monkeypatch.setattr(Dissector, "column_plan", lambda self, col, strategy="extract": None)
+        monkeypatch.setattr(Dissector, "column_plan", lambda self, col: None)
     out = dissect_columns(df, "userid=%{user_id|integer}", prefix="dissect_")
     assert dict(out.dtypes)["dissect_user_id"] == "int"
     assert out.first().dissect_user_id == 7736
@@ -206,9 +206,8 @@ def test_prefix_with_indirect_field(spark):
     assert out.dissect["message"] == "hello"
 
 
-@pytest.mark.parametrize("strategy", ["extract", "packed"])
-def test_matrix_on_both_fast_path_strategies(spark, strategy):
-    """The fast path's two strategies agree on the trim matrix."""
+def test_matrix_on_fast_path(spark):
+    """The regex fast path applies the trim matrix."""
     df = spark.createDataFrame([("hello \tworld\t \tsuper ",)], "text string")
     out = dissect_columns(
         df,
@@ -216,6 +215,5 @@ def test_matrix_on_both_fast_path_strategies(spark, strategy):
         prefix="",
         trim_values="all",
         trim_chars=" \t",
-        strategy=strategy,
     ).first()
     assert out.key == "world" and out.key2 == "super"

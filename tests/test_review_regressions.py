@@ -543,9 +543,7 @@ def test_days_checkpoint_noncanonical_day_string(spark, tmp_path):
         [("c1", 0, "2024-1-5", "s_a"), ("c1", 1, "2024-1-6", "s_b")],
         f"conv_id string, turn_idx int, date string, {SINK_COL} string",
     ).withColumn("ts", F.lit("2024-01-05 00:00:00").cast("timestamp"))
-    run = CheckpointedRun(
-        str(tmp_path / "nc"), partition_expr="days", day_col="date"
-    )
+    run = CheckpointedRun(str(tmp_path / "nc"), day_col="date")
     manifests = run.run(df, input_files=[])
     parts = sorted(m["partition"] for m in manifests)
     assert parts == ["2024-1-5", "2024-1-6"]
@@ -614,6 +612,18 @@ def test_dedup_release_intermediates(spark):
     assert released == len(owned)
     assert all(p.storageLevel == StorageLevel.NONE for p in owned)
     assert release_intermediates(kept) == 0  # idempotent
+
+
+def test_ann_lsh_topk_releases_near_dupe_intermediates(spark):
+    """ADVICE: q_ann_lsh_topk's select + union dropped the persisted
+    frame embedding_near_dupes owns, so release_intermediates on the
+    query result freed nothing."""
+    import __spark_entry__ as entry
+    from beats_spark.datapipe.dedup import release_intermediates
+
+    result = entry.q_ann_lsh_topk(spark, "/root/testdata/sf0.001")
+    result.collect()
+    assert release_intermediates(result) >= 1
 
 
 # -- round-5 session review findings (matrix-port batch) ---------------------
