@@ -19,6 +19,9 @@ partition, derived from the input:
     resumed run READS ONLY THE MISSING DAYS' FILES — at 100 TB this is
     the difference between re-scanning a day and re-scanning the table.
     A caller that wants days from `ts` adds that column and passes it.
+    `route_events` keeps only the sink schema, so an input's own day
+    column does not reach a routed frame; the frame run() gets must
+    carry it (e.g. a day-partitioned table of routed events).
 
 This is the engine's one batch fan-out writer. A run executes ONE write
 job over all missing partitions — `write.partitionBy("_part", SINK_COL)`
@@ -28,9 +31,12 @@ regardless of N (a per-partition loop would rescan it N times: 6.4 PB
 of reads for a 100 TB table at N=64) and a hot key's rows spread over
 as many files as the input has tasks. Completed partitions' directories are never touched.
 Per-partition manifests carrying lineage + throughput metrics are then
-derived from the *written* output (a footer-cheap read of the new
-files, not a re-run of the pipeline) and committed one by one:
+derived from the *written* output and committed one by one:
   {partition, input_files, rows_in, rows_per_sink, bytes, wall_ms}
+Counts and bytes come from a walk, in the calling process, of the
+committed `_part=*/_sink=*/` files (URL-unquoted: Spark escapes e.g.
+':') and their parquet footers, so no job runs after the write and a
+retried task cannot inflate them — only delivered data counts.
 
 A resume run diffs existing manifests against the partition list and
 rewrites only the missing `_part=` directories (one job for all of
@@ -45,10 +51,13 @@ commit: the data is written, the remaining manifests are not — the
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import time
+from urllib.parse import unquote
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -93,46 +102,24 @@ class CheckpointedRun:
                     continue  # torn write ⇒ not committed ⇒ recompute
         return done
 
-    def _partition_bytes(self, p) -> int:
-        path = os.path.join(self.sinks_dir, f"_part={p}")
-        if not os.path.isdir(path):
-            return 0
-        return sum(
-            os.path.getsize(os.path.join(r, f))
-            for r, _, fs in os.walk(path)
-            for f in fs
-        )
-
-    def _written_counts(self, spark: SparkSession, parts: list) -> dict:
-        """Per-sink row counts for the given partitions, read from the
-        files just written (footer-cheap; never re-runs the pipeline)."""
-        paths = [
-            os.path.join(self.sinks_dir, f"_part={p}")
-            for p in parts
-            if os.path.isdir(os.path.join(self.sinks_dir, f"_part={p}"))
-        ]
-        out: dict = {p: {} for p in parts}
-        if not paths:
-            return out
-        # read `_part` back as a STRING: partition type inference can
-        # canonicalize a non-canonical day value (e.g. '2024-1-5' inferred
-        # as date reads back '2024-01-05'), breaking the str() round-trip
-        # keying below (r3 ADVICE). A user-specified schema typing the
-        # two directory-partition columns as string disables inference
-        # FOR THIS READ ONLY — no session-wide conf flip that could race
-        # a concurrent reader on the same session (r4 ADVICE) — and
-        # prunes the scan to the partition columns (no data pages read).
-        written = (
-            spark.read.schema(f"_part string, {SINK_COL} string")
-            .option("basePath", self.sinks_dir)
-            .parquet(*paths)
-        )
-        key = {str(p): p for p in parts}
-        for r in (
-            written.groupBy("_part", SINK_COL).agg(F.count(F.lit(1)).alias("cnt")).collect()
-        ):
-            out[key[str(r["_part"])]][r[SINK_COL]] = r["cnt"]
-        return out
+    def _written(self, missing: list) -> tuple[dict, dict]:
+        """Rows per sink and bytes of each missing unit, from the files
+        the write committed: one local walk and one parquet footer read
+        per data file — no Spark job."""
+        units = {str(p): p for p in missing}  # directory value → unit
+        rows: dict = {p: {} for p in missing}
+        nbytes = dict.fromkeys(missing, 0)
+        # `[!_]*` skips Hadoop's `_`-prefixed markers; glob skips `.crc` files
+        pattern = os.path.join(glob.escape(self.sinks_dir), "_part=*", f"{SINK_COL}=*", "[!_]*")
+        for path in glob.glob(pattern):
+            part_dir, sink_dir, _ = os.path.relpath(path, self.sinks_dir).split(os.sep)
+            p = units.get(unquote(part_dir[len("_part="):]))
+            if p is None:
+                continue  # a completed unit's files
+            sink = unquote(sink_dir[len(SINK_COL) + 1:])
+            rows[p][sink] = rows[p].get(sink, 0) + pq.read_metadata(path).num_rows
+            nbytes[p] += os.path.getsize(path)
+        return rows, nbytes
 
     def _part_column(self) -> F.Column:
         if self.day_col:
@@ -167,7 +154,6 @@ class CheckpointedRun:
         `fail_after=k` raises after the k-th manifest commit (kill/resume
         tests).
         """
-        spark = routed.sparkSession
         routed = routed.withColumn("_part", self._part_column())
         done = self.completed_partitions()
         all_parts = self._all_partitions(routed)
@@ -191,7 +177,7 @@ class CheckpointedRun:
         )
         self.write_jobs = 1
         wall_ms = round((time.perf_counter() - t0) * 1000)
-        counts = self._written_counts(spark, missing)
+        counts, nbytes = self._written(missing)
         total_rows = sum(sum(c.values()) for c in counts.values())
         manifests = []
         for p in missing:
@@ -205,7 +191,7 @@ class CheckpointedRun:
                 "input_files": input_files,
                 "rows_in": rows_in,
                 "rows_per_sink": per_sink,
-                "bytes": self._partition_bytes(p),
+                "bytes": nbytes[p],
                 "wall_ms": p_wall,
                 "throughput_rows_per_sec": round(rows_in / max(p_wall, 1) * 1000, 1),
             }

@@ -13,8 +13,8 @@ compile to a fixed StructType core plus:
                                      dissect's `dissect_parsing_error`
                                      (processors/dissect/processor.go:33)
   _sink     string                   routing decision (the `@metadata`
-                                     analog, event.go:40-46) — dropped
-                                     before sink write
+                                     analog, event.go:40-46) — written
+                                     as the sinks' `_sink=` directory
 """
 
 from __future__ import annotations

@@ -17,6 +17,14 @@ Stage list (FIXTURES.md §§1,4,5):
  5. selector: dead-letter (convert_error) → role=='tool' →
     assistant-with-tool → long-tail (turn_idx≥100) → default sink_main
  6. aggregates: events/conv and events/tool per hour per sink
+
+Sink schema (SINK_COLS), what `route_events` returns and the fan-out
+writes: the event body, not input-private state (a Beats output writes
+`Fields`, not `Private`; libbeat/beat/event.go:52-62) — the oracle
+contract's 13 data columns, `_sink` (its `sink`), `log_flags` (Beats'
+`log.flags`), `has_convert_error` (read by the dead-letter rule) and
+`event_ts` (stage 2's ts_str|timestamp convert output). Dissect tokens,
+`_f_*` booleans and the input's other columns are not written.
 """
 
 from __future__ import annotations
@@ -27,7 +35,6 @@ from pyspark.sql import functions as F
 from . import synth
 from .dissect import dissect_columns
 from .events import FLAG_CONVERT_FAILURE, FLAG_DISSECT_FAILURE, FLAGS_COL, SINK_COL
-from .processors import compile_chain
 from .processors.enrich import lookup_join
 from .routing import DEAD_LETTER_SINK, route
 from .selector import Rule, Selector
@@ -40,6 +47,10 @@ SINK_AGENT = "sink_agent_tool_calls"
 SINK_LONG_TAIL = "sink_long_tail"
 SINK_MAIN = "sink_main"
 ALL_SINKS = [DEAD_LETTER_SINK, SINK_TOOL, SINK_AGENT, SINK_LONG_TAIL, SINK_MAIN]
+SINK_COLS = [
+    "conv_id", "turn_idx", "text", "ts", "role", "tool", "level", "msg", "step_num",
+    "team", "is_agent", "tool_kind", "risk", SINK_COL, FLAGS_COL, "has_convert_error", "event_ts",
+]
 
 
 def flagship_selector() -> Selector:
@@ -87,7 +98,8 @@ def parse_enrich(transcripts: DataFrame, spark: SparkSession) -> DataFrame:
 
 
 def route_events(df: DataFrame) -> DataFrame:
-    """Stages 4-5: drop_event + selector routing (+ dead-letter).
+    """Stages 4-5: drop_event + selector routing (+ dead-letter), ending
+    in exactly SINK_COLS (the module docstring gives each column's why).
 
     The drop_event predicate is guarded by an always-false
     spark_partition_id() disjunct: the predicate references parse
@@ -116,7 +128,7 @@ def route_events(df: DataFrame) -> DataFrame:
             ),
         ),
     )
-    return route(df, flagship_selector())
+    return route(df, flagship_selector()).select(*SINK_COLS)
 
 
 def flagship(spark: SparkSession, sf_dir: str) -> DataFrame:

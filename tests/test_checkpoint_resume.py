@@ -8,6 +8,7 @@ import json
 import os
 
 import pytest
+from pyspark.sql import functions as F
 
 from beats_spark.checkpoint import CheckpointedRun
 from beats_spark.pipeline import flagship
@@ -64,6 +65,11 @@ def test_manifest_contents(spark, routed, tmp_path):
         assert m["rows_in"] == sum(m["rows_per_sink"].values())
         total += m["rows_in"]
     assert total == routed.count()
+    # each unit's counts are that unit's rows, not another unit's
+    want: dict = {}
+    for r in routed.groupBy(F.pmod(F.hash("conv_id"), F.lit(4)).alias("p"), "_sink").count().collect():
+        want.setdefault(r["p"], {})[r["_sink"]] = r["count"]
+    assert {m["partition"]: m["rows_per_sink"] for m in manifests} == want
 
 
 def test_torn_manifest_recomputed(spark, routed, tmp_path):

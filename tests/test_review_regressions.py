@@ -529,25 +529,37 @@ def test_scriptbatch_masked_append_preserves_other_rows(spark):
     assert got[2] == ["x", "y"]
 
 
-def test_days_checkpoint_noncanonical_day_string(spark, tmp_path):
-    """R4 ADVICE 3: a non-canonical day value ('2024-1-5') must round-trip
-    through the written-partition read-back (partition type inference
-    would canonicalize it to '2024-01-05' and KeyError the manifest
-    keying)."""
+@pytest.mark.parametrize(
+    "days, sinks",
+    [
+        (("2024-1-5", "2024-1-6"), ("s_a", "s_b")),
+        # Spark escapes ':' in partition directory names:
+        # `_part=2024-01-05T10%3A00/_sink=s%3Ab`
+        (("2024-01-05T10:00", "2024-01-05T11:00"), ("s_a", "s:b")),
+    ],
+    ids=["noncanonical", "escaped"],
+)
+def test_days_checkpoint_noncanonical_day_string(spark, tmp_path, days, sinks):
+    """R4 ADVICE 3: a non-canonical day value ('2024-1-5') must keep its
+    exact string (partition type inference would canonicalize it to
+    '2024-01-05'), and a unit or sink value Spark escapes in its
+    directory name must be counted under its unescaped value."""
     from pyspark.sql import functions as F
 
     from beats_spark.checkpoint import CheckpointedRun
     from beats_spark.events import SINK_COL
 
     df = spark.createDataFrame(
-        [("c1", 0, "2024-1-5", "s_a"), ("c1", 1, "2024-1-6", "s_b")],
+        [("c1", 0, days[0], sinks[0]), ("c1", 1, days[1], sinks[1])],
         f"conv_id string, turn_idx int, date string, {SINK_COL} string",
     ).withColumn("ts", F.lit("2024-01-05 00:00:00").cast("timestamp"))
     run = CheckpointedRun(str(tmp_path / "nc"), day_col="date")
     manifests = run.run(df, input_files=[])
-    parts = sorted(m["partition"] for m in manifests)
-    assert parts == ["2024-1-5", "2024-1-6"]
-    assert all(m["rows_in"] == 1 for m in manifests)
+    by_part = {m["partition"]: m for m in manifests}
+    assert sorted(by_part) == sorted(days)
+    assert by_part[days[0]]["rows_per_sink"] == {sinks[0]: 1}
+    assert by_part[days[1]]["rows_per_sink"] == {sinks[1]: 1}
+    assert all(m["rows_in"] == 1 and m["bytes"] > 0 for m in manifests)
 
 
 def test_stream_to_sinks_clears_stale_batch_file(spark, tmp_path):

@@ -13,9 +13,11 @@ from collections import Counter
 
 from pyspark.sql import functions as F
 
+import __spark_entry__ as entry
 from beats_spark import synth
 from beats_spark.checkpoint import CheckpointedRun
-from beats_spark.pipeline import flagship, parse_enrich, route_events
+from beats_spark.events import SINK_COL
+from beats_spark.pipeline import SINK_COLS, flagship, parse_enrich, route_events
 from beats_spark.routing import salted_repartition
 from beats_spark.sources import read_transcripts
 
@@ -23,13 +25,31 @@ SF = "/root/testdata/sf0.01"
 HOT_CONV = "conv-00000000"
 
 
+def _jobs(spark, group: str, action) -> int:
+    """Spark jobs started by `action`, counted by job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_checkpointed_fanout_counts_layout_and_hot_key_spread(spark, tmp_path):
     """CheckpointedRun.run over the benchmark's table shape (16 files):
-    per-sink counts, sink layout, no shuffle, hot key over many files."""
+    per-sink counts, sink layout, sink schema, no shuffle, no job after
+    the write, hot key over many files."""
     table = synth.materialize_transcripts(spark, SF, str(tmp_path / "t"), replicas=1, files=16)
     routed = route_events(parse_enrich(read_transcripts(spark, table), spark))
     run = CheckpointedRun(str(tmp_path / "out"))
-    manifests = run.run(routed, input_files=[table])
+    manifests = []
+    run_jobs = _jobs(spark, "fanout_run", lambda: manifests.extend(run.run(routed, input_files=[table])))
+    # the run starts the jobs of one write of `routed` and nothing more:
+    # its counts come from the written files, not from a read-back job
+    noop_jobs = _jobs(spark, "fanout_noop", lambda: routed.write.format("noop").mode("overwrite").save())
+    assert run_jobs == noop_jobs, (run_jobs, noop_jobs)
     expected = {r["_sink"]: r["count"] for r in routed.groupBy("_sink").count().collect()}
     # manifests count every routed row, per sink
     written = Counter()
@@ -45,6 +65,10 @@ def test_checkpointed_fanout_counts_layout_and_hot_key_spread(spark, tmp_path):
         if d.startswith("_sink=")
     }
     assert sink_dirs == {f"_sink={s}" for s in expected}
+    # the sinks hold the sink schema and nothing else: every oracle
+    # contract column, no parse-internal column
+    assert set(run.read_output(spark).columns) == set(SINK_COLS) | {"_part"}
+    assert {SINK_COL if c == "sink" else c for c in entry._ROUTED_COLS} <= set(SINK_COLS)
     # the write shuffles nothing: only the enrich broadcasts exchange
     shuffles = [
         line for line in run.last_plan.splitlines()
