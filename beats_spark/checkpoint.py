@@ -24,25 +24,40 @@ partition, derived from the input:
     carry it (e.g. a day-partitioned table of routed events).
 
 This is the engine's one batch fan-out writer. A run executes ONE write
-job over all missing partitions — `write.partitionBy("_part", SINK_COL)`
-with DYNAMIC partition overwrite and no shuffle (each input task writes
-its own file per (_part, sink)), so the input is scanned exactly once
+over all missing partitions — `write.partitionBy("_part", SINK_COL)`
+with DYNAMIC partition overwrite — so the input is scanned exactly once
 regardless of N (a per-partition loop would rescan it N times: 6.4 PB
-of reads for a 100 TB table at N=64) and a hot key's rows spread over
-as many files as the input has tasks. Completed partitions' directories are never touched.
+of reads for a 100 TB table at N=64). Just before the write the frame
+is rebalanced on (_part, SINK_COL) (the REBALANCE hint; AQE is on in
+`session.get_spark`), so files are sized by data, not by input tasks:
+  files ≈ units × sinks + bytes / advisoryPartitionSizeInBytes
+where a shuffle-free write makes one file per input task × unit × sink
+(132 files for 6.35 MB on the 16-task benchmark table, 33 with the
+rebalance; 32M at 10^5 tasks × 64 units × 5 sinks), each costing a file
+create, a checksum file and a later listing and open by every reader.
+AQE merges small shuffle partitions and splits one larger than the
+advisory size, so a hot unit's rows still spread over several files
+once they are large. The resume filter sits below the rebalance, so it
+still reaches the scan. Completed partitions' directories are never
+touched.
 Per-partition manifests carrying lineage + throughput metrics are then
 derived from the *written* output and committed one by one:
-  {partition, input_files, rows_in, rows_per_sink, bytes, wall_ms}
+  {partition, unit, input_files, rows_in, rows_per_sink, bytes, wall_ms}
 Counts and bytes come from a walk, in the calling process, of the
 committed `_part=*/_sink=*/` files (URL-unquoted: Spark escapes e.g.
 ':') and their parquet footers, so no job runs after the write and a
 retried task cannot inflate them — only delivered data counts.
 
 A resume run diffs existing manifests against the partition list and
-rewrites only the missing `_part=` directories (one job for all of
+rewrites only the missing `_part=` directories (one write for all of
 them). Task-level retry inside the job is Spark's; partition-level
 idempotence comes from the dynamic overwrite — together they upgrade
-Beats' at-least-once to effectively-once per partition.
+Beats' at-least-once to effectively-once per partition. A partition id
+means something only under the unit spec that made it, so each
+manifest records that spec (`unit`: `hash(conv_id)%N` or `day_col=C`)
+and run() refuses an out_dir whose committed manifests carry another:
+matched by id alone, going from N=8 to N=4 would compute nothing and
+going from 4 to 8 would write units 4-7 beside the stale 0-3.
 
 `fail_after=k` (kill/resume tests) raises after the k-th manifest
 commit: the data is written, the remaining manifests are not — the
@@ -72,23 +87,31 @@ class CheckpointedRun:
         self.manifest_dir = os.path.join(out_dir, "_manifests")
         self.sinks_dir = os.path.join(out_dir, "sinks")
         os.makedirs(self.manifest_dir, exist_ok=True)
-        self.write_jobs = 0  # write jobs executed by the last run() call
-        self._last_written: DataFrame | None = None
+        self.write_jobs = 0  # writes executed by the last run() call
+        self.last_written: DataFrame | None = None  # the frame the last run() wrote
+
+    @property
+    def unit(self) -> str:
+        """The unit spec a partition id is relative to."""
+        if self.day_col:
+            return f"day_col={self.day_col}"
+        return f"hash(conv_id)%{self.n_partitions}"
 
     @property
     def last_plan(self) -> str:
         """Physical plan of the last write's input (audit), rendered only
         when read — planning it on every run() would cost the write path."""
-        if self._last_written is None:
+        if self.last_written is None:
             return ""
-        return self._last_written._jdf.queryExecution().executedPlan().toString()
+        return self.last_written._jdf.queryExecution().executedPlan().toString()
 
     def _manifest_path(self, p) -> str:
         name = f"part-{p:05d}" if isinstance(p, int) else f"part-{p}"
         return os.path.join(self.manifest_dir, f"{name}.json")
 
-    def completed_partitions(self) -> set:
-        done = set()
+    def _committed(self) -> dict:
+        """Unit spec of each committed partition id."""
+        done = {}
         for f in os.listdir(self.manifest_dir):
             if f.startswith("part-") and f.endswith(".json"):
                 try:
@@ -97,10 +120,13 @@ class CheckpointedRun:
                     # JSON round-trips the partition id's type (int for
                     # hash units, str for day_col units) — no coercion, so
                     # a digit-valued day string never aliases an int id
-                    done.add(m["partition"])
+                    done[m["partition"]] = m.get("unit")
                 except (json.JSONDecodeError, KeyError):
                     continue  # torn write ⇒ not committed ⇒ recompute
         return done
+
+    def completed_partitions(self) -> set:
+        return set(self._committed())
 
     def _written(self, missing: list) -> tuple[dict, dict]:
         """Rows per sink and bytes of each missing unit, from the files
@@ -147,15 +173,23 @@ class CheckpointedRun:
         input_files: list[str],
         fail_after: int | None = None,
     ) -> list[dict]:
-        """Write all missing partitions in ONE job, then commit their
-        manifests one by one; resume-safe.
+        """Write all missing partitions in ONE write, then commit their
+        manifests one by one; resume-safe. Raises ValueError when out_dir
+        holds partitions of another unit spec.
 
         `routed` must contain conv_id + SINK_COL (+ day_col when set).
         `fail_after=k` raises after the k-th manifest commit (kill/resume
         tests).
         """
+        done = self._committed()
+        other = set(done.values()) - {self.unit}
+        if other:
+            raise ValueError(
+                f"{self.out_dir} holds partitions of unit spec {sorted(map(str, other))}, "
+                f"this run's is {self.unit!r}: a resume must keep its unit spec — "
+                "use a fresh out_dir for another one"
+            )
         routed = routed.withColumn("_part", self._part_column())
-        done = self.completed_partitions()
         all_parts = self._all_partitions(routed)
         missing = [p for p in all_parts if p not in done]
         self.write_jobs = 0
@@ -168,7 +202,9 @@ class CheckpointedRun:
             # a PartitionFilter → only missing days' files are read
             # (asserted in tests via last_plan)
             df = df.filter(F.col("_part").isin(missing))
-        self._last_written = df
+        # size files by data, not by input tasks (module docstring)
+        df = df.hint("rebalance", "_part", SINK_COL)
+        self.last_written = df
         (
             df.write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
@@ -188,6 +224,7 @@ class CheckpointedRun:
             p_wall = max(1, round(wall_ms * share))
             manifest = {
                 "partition": p,
+                "unit": self.unit,
                 "input_files": input_files,
                 "rows_in": rows_in,
                 "rows_per_sink": per_sink,

@@ -3,16 +3,14 @@
 The reference evaluates the selector per event and groups bulk requests
 per sink (elasticsearch.go:144-166); we evaluate the selector as ONE
 Column (`route`). The batch fan-out itself is `CheckpointedRun.run`
-(checkpoint.py): a single shuffle-free `partitionBy("_part", _sink)`
-write — one pass, file-per-sink-per-task, Iceberg/Hive-style partition
-layout so downstream readers partition-prune by sink.
+(checkpoint.py): one `partitionBy("_part", _sink)` write after a
+rebalance on the same columns — one pass, files sized by data (about
+one per unit and sink, split further by AQE when large), Iceberg/Hive-
+style partition layout so downstream readers partition-prune by sink.
 
-Skew: with no shuffle before the write a hot conversation (5% of rows)
-spreads over as many files as the input has tasks. For writes that DO
-shuffle on the key, `salted_repartition` spreads a hot key over S
-buckets while keeping turn-order recoverable via (conv_id, turn_idx)
-sort keys (kafka's hash partitioner, partition.go:114-143, hotspots
-instead).
+Skew: the rebalance's AQE split spreads a hot conversation's unit over
+several files once it outgrows the advisory partition size — where
+kafka's hash partitioner (partition.go:114-143) hotspots one partition.
 """
 
 from __future__ import annotations
@@ -28,19 +26,6 @@ DEAD_LETTER_SINK = "sink_dead_letter"  # dead_letter_index analog (client.go:63-
 
 def route(df: DataFrame, selector: Selector, ts_col: str = "ts") -> DataFrame:
     return df.withColumn(SINK_COL, selector.column(ts_col, dtypes=dict(df.dtypes)))
-
-
-def salted_repartition(
-    df: DataFrame, key: str = "conv_id", salt_buckets: int = 16, num_partitions: int | None = None
-) -> DataFrame:
-    """Spread skewed keys: partition on (key, pmod(hash(turn_idx), S)).
-
-    Rows of one hot conv land in S partitions instead of 1; everything
-    stays deterministic (hash of turn_idx, not rand())."""
-    salt = F.pmod(F.hash(F.col("turn_idx")), F.lit(salt_buckets))
-    if num_partitions:
-        return df.repartition(num_partitions, F.col(key), salt)
-    return df.repartition(F.col(key), salt)
 
 
 # FNV-32a parameters (Go hash/fnv, used by partition.go's hashers)

@@ -9,7 +9,7 @@ and in DuckDB (for the correctness oracle) with no data files exchanged.
 
 Properties (FIXTURES.md §1):
   * skewed hot key: conv-00000000 owns 5% of all rows (event_id % 20 == 0)
-    — exercises salting / AQE-skew paths;
+    — exercises the AQE skew paths;
   * ~10% malformed lines (event_id % 10 == 7) — exercises the
     dissect_parsing_error / log.flags path;
   * ~7% numeric-conversion poison (event_id % 13 == 5 → step='xx') —

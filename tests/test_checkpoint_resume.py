@@ -140,3 +140,22 @@ def test_days_mode_resume_prunes_scan(spark, routed, tmp_path):
     got = _collect(run.read_output(spark))
     want = _collect(clean.read_output(spark))
     assert got == want
+
+
+@pytest.mark.parametrize("first,second", [(8, 4), (4, 8)])
+def test_resume_refuses_changed_unit_spec(spark, routed, tmp_path, first, second):
+    """A partition id means something only under its unit spec: matched
+    by id alone, 8 → 4 units would compute nothing and 4 → 8 would write
+    units 4-7 beside the stale 0-3. The run must refuse instead."""
+    out = str(tmp_path / "spec")
+    manifests = CheckpointedRun(out, n_partitions=first).run(routed, input_files=["f1"])
+    rerun = CheckpointedRun(out, n_partitions=second)
+    dirs = sorted(os.listdir(rerun.sinks_dir))
+    with pytest.raises(ValueError) as err:
+        rerun.run(routed, input_files=["f1"])
+    assert f"hash(conv_id)%{first}" in str(err.value) and f"hash(conv_id)%{second}" in str(err.value)
+    # nothing was written or committed by the refused run
+    assert rerun.write_jobs == 0
+    assert rerun.completed_partitions() == set(range(first))
+    assert sorted(os.listdir(rerun.sinks_dir)) == dirs
+    assert {m["unit"] for m in manifests} == {f"hash(conv_id)%{first}"}

@@ -1,13 +1,16 @@
-"""Fan-out write path: sink partitioning + hot-key spread evidence.
+"""Fan-out write path: sink partitioning, file sizing + hot-key spread
+evidence.
 
-The hot conversation owns 5% of all rows. CheckpointedRun's fan-out is a
-shuffle-free partitionBy(_part, _sink) write, so the hot conversation's
-rows stay spread over the input's tasks' files; salted_repartition is
-the tool for writes that shuffle on the key.
+The hot conversation owns 5% of all rows. CheckpointedRun's fan-out
+rebalances on (_part, _sink) before its partitionBy(_part, _sink)
+write, so files follow the data: one per (unit, sink) at the default
+advisory size, and AQE splits a hot unit over several files once it is
+larger than the advisory size.
 """
 
 from __future__ import annotations
 
+import glob
 import os
 from collections import Counter
 
@@ -17,12 +20,12 @@ import __spark_entry__ as entry
 from beats_spark import synth
 from beats_spark.checkpoint import CheckpointedRun
 from beats_spark.events import SINK_COL
-from beats_spark.pipeline import SINK_COLS, flagship, parse_enrich, route_events
-from beats_spark.routing import salted_repartition
+from beats_spark.pipeline import SINK_COLS, parse_enrich, route_events
 from beats_spark.sources import read_transcripts
 
 SF = "/root/testdata/sf0.01"
 HOT_CONV = "conv-00000000"
+ADVISORY = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
 
 
 def _jobs(spark, group: str, action) -> int:
@@ -39,16 +42,19 @@ def _jobs(spark, group: str, action) -> int:
 
 def test_checkpointed_fanout_counts_layout_and_hot_key_spread(spark, tmp_path):
     """CheckpointedRun.run over the benchmark's table shape (16 files):
-    per-sink counts, sink layout, sink schema, no shuffle, no job after
-    the write, hot key over many files."""
+    per-sink counts, sink layout, sink schema, one rebalance exchange, no
+    job after the write, files sized by data, hot key over many files."""
     table = synth.materialize_transcripts(spark, SF, str(tmp_path / "t"), replicas=1, files=16)
     routed = route_events(parse_enrich(read_transcripts(spark, table), spark))
     run = CheckpointedRun(str(tmp_path / "out"))
     manifests = []
     run_jobs = _jobs(spark, "fanout_run", lambda: manifests.extend(run.run(routed, input_files=[table])))
-    # the run starts the jobs of one write of `routed` and nothing more:
-    # its counts come from the written files, not from a read-back job
-    noop_jobs = _jobs(spark, "fanout_noop", lambda: routed.write.format("noop").mode("overwrite").save())
+    # the run starts the jobs of one write of the frame it writes (under
+    # AQE the rebalance's map stage is a job of its own) and nothing
+    # more: its counts come from the written files, not a read-back job
+    noop_jobs = _jobs(
+        spark, "fanout_noop", lambda: run.last_written.write.format("noop").mode("overwrite").save()
+    )
     assert run_jobs == noop_jobs, (run_jobs, noop_jobs)
     expected = {r["_sink"]: r["count"] for r in routed.groupBy("_sink").count().collect()}
     # manifests count every routed row, per sink
@@ -69,16 +75,33 @@ def test_checkpointed_fanout_counts_layout_and_hot_key_spread(spark, tmp_path):
     # contract column, no parse-internal column
     assert set(run.read_output(spark).columns) == set(SINK_COLS) | {"_part"}
     assert {SINK_COL if c == "sink" else c for c in entry._ROUTED_COLS} <= set(SINK_COLS)
-    # the write shuffles nothing: only the enrich broadcasts exchange
+    # the write shuffles once, to rebalance on (_part, _sink); the enrich
+    # joins only broadcast
     shuffles = [
         line for line in run.last_plan.splitlines()
         if "Exchange" in line and "BroadcastExchange" not in line
     ]
-    assert not shuffles, run.last_plan
-    # the hot conversation is spread over several files, none dominant
+    assert len(shuffles) == 1, run.last_plan
+    assert "REBALANCE_PARTITIONS_BY_COL" in shuffles[0], shuffles
+    assert "hashpartitioning(_part#" in shuffles[0] and f", {SINK_COL}#" in shuffles[0], shuffles
+    # files follow the data, not the input's 16 tasks: at most one per
+    # (unit, sink) pair present (a file per task x unit x sink without
+    # the rebalance)
+    files = glob.glob(os.path.join(run.sinks_dir, "_part=*", "_sink=*", "*.parquet"))
+    pairs = sum(len(m["rows_per_sink"]) for m in manifests)
+    assert len(files) <= pairs, (len(files), pairs)
+    # once a unit is larger than the advisory size, AQE splits it: the hot
+    # conversation is spread over several files, none dominant
+    before = spark.conf.get(ADVISORY)
+    spark.conf.set(ADVISORY, "16k")
+    try:
+        small = CheckpointedRun(str(tmp_path / "small_files"))
+        small.run(routed, input_files=[table])
+    finally:
+        spark.conf.set(ADVISORY, before)
     per_file = [
         r["count"]
-        for r in run.read_output(spark)
+        for r in small.read_output(spark)
         .filter(F.col("conv_id") == HOT_CONV)
         .groupBy(F.input_file_name())
         .count()
@@ -86,33 +109,6 @@ def test_checkpointed_fanout_counts_layout_and_hot_key_spread(spark, tmp_path):
     ]
     assert len(per_file) > 1, per_file
     assert max(per_file) / sum(per_file) < 0.5, per_file
-
-
-def test_salted_repartition_spreads_hot_conv(spark):
-    routed = flagship(spark, SF)
-    salted = salted_repartition(routed, "conv_id", salt_buckets=8, num_partitions=16)
-    dist = (
-        salted.withColumn("pid", F.spark_partition_id())
-        .filter(F.col("conv_id") == HOT_CONV)
-        .groupBy("pid")
-        .count()
-        .collect()
-    )
-    # the hot conversation must occupy >1 partition (no single-task hotspot)
-    assert len(dist) > 1, f"hot conv landed in a single partition: {dist}"
-    biggest = max(r["count"] for r in dist)
-    total = sum(r["count"] for r in dist)
-    assert biggest / total < 0.5, f"salting too skewed: {dist}"
-    # determinism: same salt → same distribution
-    dist2 = (
-        salted_repartition(routed, "conv_id", salt_buckets=8, num_partitions=16)
-        .withColumn("pid", F.spark_partition_id())
-        .filter(F.col("conv_id") == HOT_CONV)
-        .groupBy("pid")
-        .count()
-        .collect()
-    )
-    assert sorted((r.pid, r["count"]) for r in dist) == sorted((r.pid, r["count"]) for r in dist2)
 
 
 def test_rate_limit_matches_single_window(spark):
