@@ -73,6 +73,21 @@ class FlowConfigError(ValueError):
     """ErrInvalidTimeout / ErrInvalidPeriod (packetbeat/flows/flows.go)."""
 
 
+def _grid(timeout_seconds: int, period_seconds: int) -> tuple[int, int, int]:
+    """The worker's tick grid (makeWorker, worker.go:196-231), shared by
+    flow_reports and its streaming twin: (tick, ticks per timeout check,
+    ticks per periodic report — 0 when reporting only at flow end)."""
+    if timeout_seconds < 1:
+        raise FlowConfigError("invalid flow timeout (must be >= 1s)")
+    if 0 < period_seconds < 1:
+        raise FlowConfigError("invalid flow reporting period (must be >= 1s)")
+    tick = math.gcd(timeout_seconds, period_seconds) if period_seconds > 0 else timeout_seconds
+    tick = max(tick, 1)
+    ticks_timeout = max(1, timeout_seconds // tick)
+    ticks_period = max(1, period_seconds // tick) if period_seconds > 0 else 0
+    return tick, ticks_timeout, ticks_period
+
+
 def flow_reports(
     df: DataFrame,
     keys: list[str],
@@ -116,28 +131,24 @@ def flow_reports(
     SUM (the reference counter registries are additive accumulators,
     counters.go:17-60). Default: {"packets": 1}.
 
-    Scale shape: one window over (keys, ts) for flow segmentation
-    (single exchange on keys, same as sessionization), one hash
-    aggregate per (keys, flow, report-bucket) with map-side partials,
-    then a skeleton explode of report ticks joined back on the flow key
-    — every stage is keyed by `keys`, so the exchange is reused and hot
-    keys are absorbed by partial aggregation. The skeleton is bounded by
-    flow-lifetime/period rows per flow, never by event count.
+    Scale shape: one pass keyed on `keys`, over a single exchange.
+    Two windows ordered by the projected epoch `_e` segment each key's
+    events into flows (one sort). The per-(keys, flow, report-bucket)
+    aggregate runs on the segmented frame, whose hash partitioning on
+    `keys` it reuses (map-side partials absorb hot keys). One window per
+    flow, ordered by bucket, then yields the next bucket, the flow
+    totals and kill tick, and the running counters; each bucket row
+    explodes into the report ticks up to the next bucket, and the
+    flow's last bucket adds the final report (LightSaber-style reuse of
+    per-bucket partials: nothing is joined back). The output is bounded
+    by flow-lifetime/period rows per flow, never by event count.
     """
-    if timeout_seconds < 1:
-        raise FlowConfigError("invalid flow timeout (must be >= 1s)")
-    if 0 < period_seconds < 1:
-        raise FlowConfigError("invalid flow reporting period (must be >= 1s)")
+    tick, ticks_timeout, ticks_period = _grid(timeout_seconds, period_seconds)
+    ci = ticks_timeout * tick                               # check interval
+    ri = ticks_period * tick if ticks_period else None      # report interval
     if counters is None:
         counters = {"packets": F.lit(1)}
     cnames = list(counters)
-
-    # math.gcd, same as the streaming twin's _grid — the two tick grids
-    # must stay in lockstep
-    tick = math.gcd(timeout_seconds, period_seconds) if period_seconds > 0 else timeout_seconds
-    tick = max(tick, 1)
-    ci = max(1, timeout_seconds // tick) * tick          # check interval
-    ri = max(1, period_seconds // tick) * tick if period_seconds > 0 else None
 
     if t0_epoch is None:
         row = df.agg(
@@ -150,9 +161,6 @@ def flow_reports(
             t0_epoch = math.ceil(row[0] / a) * a
     t0 = float(t0_epoch)
 
-    # NTZ-safe epoch seconds (TIMESTAMP_NTZ can't cast straight to double;
-    # the session tz is UTC so NTZ→TIMESTAMP is the identity rendering)
-    e = F.col(ts_col).cast("timestamp").cast("double")
     kcols = [F.col(k) for k in keys]
 
     # kill grid: K(p) = smallest T0 + k*CI (k>=1) strictly after p+timeout
@@ -160,11 +168,23 @@ def flow_reports(
         k = F.floor((ts_d + F.lit(float(timeout_seconds)) - F.lit(t0)) / F.lit(float(ci))) + 1
         return F.lit(t0) + F.greatest(F.lit(1).cast("long"), k).cast("double") * F.lit(float(ci))
 
+    # The one exchange of the pass, at the session's shuffle width. AQE
+    # would coalesce it by the shuffled event bytes, but the stage after
+    # it emits several times more report rows than it reads (perfbench's
+    # stateful table: 150k events in, 691k rows out, 2 post-shuffle tasks
+    # on 4 cores when coalesced); an explicit width is never coalesced.
+    width = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    # NTZ-safe epoch seconds (TIMESTAMP_NTZ can't cast straight to double;
+    # the session tz is UTC so NTZ→TIMESTAMP is the identity rendering),
+    # projected once so both segmentation windows share one sort
+    e = F.col("_e")
     w_order = Window.partitionBy(*kcols).orderBy(e)
     prev = F.lag(e).over(w_order)
-    new_flow = F.when(prev.isNull() | (e > kill_tick(prev)), 1).otherwise(0)
-    seg = df.withColumn("_nf", new_flow).withColumn(
-        "_flow", F.sum("_nf").over(w_order.rowsBetween(Window.unboundedPreceding, 0))
+    seg = (
+        df.repartition(width, *kcols)
+        .withColumn("_e", F.col(ts_col).cast("timestamp").cast("double"))
+        .withColumn("_nf", F.when(prev.isNull() | (e > kill_tick(prev)), 1).otherwise(0))
+        .withColumn("_flow", F.sum("_nf").over(w_order.rowsBetween(Window.unboundedPreceding, 0)))
     )
 
     # report-bucket index: the first report tick at which the event is visible
@@ -176,141 +196,71 @@ def flow_reports(
     # start/end ride the ORIGINAL timestamp column (exact, no
     # double→timestamp reconstruction); doubles are used only for the
     # grid arithmetic where they are exact (integer-second grids)
-    #
-    # r6 plan shape: the r5 form aggregated `seg` TWICE (per_bucket and
-    # flows as independent aggregations) and then referenced `flows`
-    # from up to three subtrees (skeleton, join, final) — Catalyst does
-    # not deduplicate common subtrees, so the whole upstream
-    # window-segmentation (exchange + sort + lag + running sum) executed
-    # 3× per run. Now: ONE pass over seg builds per_bucket (extended
-    # with the min/max fields flows needs), per_bucket is persisted
-    # (rows ∝ flows × report-buckets — far smaller than events, spills
-    # to disk if not), and `flows` is a re-aggregation of per_bucket:
-    # min-of-mins / max-of-maxes / sum-of-partial-sums are exactly the
-    # direct aggregates. Every downstream subtree reads the cached
-    # per_bucket/flows instead of re-running the window.
-    per_bucket = seg.groupBy(*kcols, F.col("_flow"), j_of.alias("_j")).agg(
-        F.min(e).alias("_bkt_start"),
-        F.max(e).alias("_bkt_last"),
+    buckets = seg.groupBy(*kcols, F.col("_flow"), j_of.alias("_j")).agg(
         F.min(F.col(ts_col)).alias("_bkt_start_ts"),
         F.max(F.col(ts_col)).alias("_bkt_last_ts"),
         *[F.sum(expr).alias(f"_c_{n}") for n, expr in counters.items()],
     )
-    from .datapipe.dedup import _materialize, _track
 
-    per_bucket = _materialize(per_bucket)
-    flows = per_bucket.groupBy(*kcols, F.col("_flow")).agg(
-        F.min("_bkt_start").alias("_start"),
-        F.max("_bkt_last").alias("_last"),
-        F.min("_bkt_start_ts").alias("_start_ts"),
-        F.max("_bkt_last_ts").alias("_last_ts"),
-        *[F.sum(f"_c_{n}").alias(f"_tot_{n}") for n in cnames],
-    ).withColumn("_kill", kill_tick(F.col("_last")))
-    flows = _materialize(flows)
-
-    final_base = flows.select(
+    w_flow = Window.partitionBy(*kcols, F.col("_flow")).orderBy("_j")
+    w_all = w_flow.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    w_run = w_flow.rowsBetween(Window.unboundedPreceding, 0)
+    flows = buckets.select(
         *kcols,
         "_flow",
-        F.col("_kill").alias("_report"),
-        F.col("_start_ts").alias("flow_start"),
-        F.col("_last_ts").alias("flow_end"),
-        F.lit(True).alias("final"),
-        *[F.col(f"_tot_{n}").alias(n) for n in cnames],
-    )
+        "_j",
+        F.lead("_j").over(w_flow).alias("_next_j"),
+        F.min("_bkt_start_ts").over(w_all).alias("flow_start"),
+        F.max("_bkt_last_ts").over(w_all).alias("_last_ts"),
+        F.max("_bkt_last_ts").over(w_run).alias("_run_last_ts"),
+        *[F.col(f"_c_{n}") for n in cnames],
+        *[F.sum(f"_c_{n}").over(w_all).alias(f"_tot_{n}") for n in cnames],
+        *[F.sum(F.coalesce(f"_c_{n}", F.lit(0))).over(w_run).alias(f"_run_{n}") for n in cnames],
+    ).withColumn("_kill", kill_tick(F.col("_last_ts").cast("timestamp").cast("double")))
 
-    if ri is None:
-        out = final_base
+    # Each bucket row explodes into its report ticks r: the periodic
+    # ticks _j .. min(next bucket - 1, j_max), where j_max is the largest
+    # r with T0 + r*RI < kill (strict: the kill tick emits the final),
+    # and on the flow's last bucket r = 0, the final report.
+    j, r = F.col("_j"), F.col("_r")
+    final = r == 0
+    if ri is None:  # reports only at flow end: one bucket per flow
+        out = flows.withColumn("_r", F.lit(0).cast("long"))
+        report_at = F.col("_kill")
     else:
-        # periodic skeleton: j in [max(1, ceil((start-T0)/RI)) .. last j with T0+j*RI < kill]
-        j_min = F.greatest(
-            F.lit(1).cast("long"),
-            F.ceil((F.col("_start") - F.lit(t0)) / F.lit(float(ri))),
-        )
-        # largest j with T0 + j*RI < kill (strict: the kill tick emits the final)
         j_max = F.ceil((F.col("_kill") - F.lit(t0)) / F.lit(float(ri))) - 1
-        skel = (
-            flows.withColumn(
-                "_js",
-                F.when(j_min <= j_max, F.sequence(j_min, j_max)).otherwise(
-                    F.array().cast("array<long>")
-                ),
-            )
-            .select(*kcols, "_flow", "_start_ts", F.explode("_js").alias("_j"))
-        )
-        w_run = (
-            Window.partitionBy(*kcols, "_flow")
-            .orderBy("_j")
-            .rowsBetween(Window.unboundedPreceding, 0)
-        )
-        joined = skel.join(per_bucket, [*keys, "_flow", "_j"], "left")
-        running_last = F.max(F.col("_bkt_last_ts")).over(w_run)
-        if delta:
-            cexprs = [F.coalesce(F.col(f"_c_{n}"), F.lit(0)).alias(n) for n in cnames]
-        else:
-            cexprs = [
-                F.sum(F.coalesce(F.col(f"_c_{n}"), F.lit(0))).over(w_run).alias(n)
-                for n in cnames
-            ]
-        periodic = joined.select(
-            *kcols,
-            "_flow",
-            (F.lit(t0) + F.col("_j").cast("double") * F.lit(float(ri))).alias("_report"),
-            F.col("_start_ts").alias("flow_start"),
-            running_last.alias("flow_end"),
-            F.lit(False).alias("final"),
-            *cexprs,
-        )
-        if delta:
-            # final delta = totals minus everything already reported
-            # periodically = sum of buckets with j <= j_max
-            reported = (
-                per_bucket.join(
-                    flows.select(*kcols, "_flow", "_start", "_kill"), [*keys, "_flow"]
-                )
-                .where(
-                    F.col("_j")
-                    <= F.ceil((F.col("_kill") - F.lit(t0)) / F.lit(float(ri))) - 1
-                )
-                .groupBy(*kcols, "_flow")
-                .agg(*[F.sum(f"_c_{n}").alias(f"_rep_{n}") for n in cnames])
-            )
-            final_base = (
-                flows.join(reported, [*keys, "_flow"], "left")
-                .select(
-                    *kcols,
-                    "_flow",
-                    F.col("_kill").alias("_report"),
-                    F.col("_start_ts").alias("flow_start"),
-                    F.col("_last_ts").alias("flow_end"),
-                    F.lit(True).alias("final"),
-                    *[
-                        (
-                            F.col(f"_tot_{n}")
-                            - F.coalesce(F.col(f"_rep_{n}"), F.lit(0))
-                        ).alias(n)
-                        for n in cnames
-                    ],
-                )
-            )
-        out = periodic.unionByName(final_base)
+        j_end = F.least(F.col("_next_j") - 1, j_max)  # least skips NULL
+        js = F.when(j <= j_end, F.sequence(j, j_end)).otherwise(F.array().cast("array<long>"))
+        ticks = F.when(F.col("_next_j").isNull(), F.concat(js, F.array(F.lit(0).cast("long"))))
+        out = flows.select("*", F.explode(ticks.otherwise(js)).alias("_r"))
+        report_at = F.when(final, F.col("_kill")).otherwise(F.lit(t0) + r.cast("double") * F.lit(float(ri)))
 
+    def counter(n: str) -> Column:
+        # a bucket's sum is coalesced to 0 before it enters a periodic or
+        # delta value; the final totals stay SUM over the flow's buckets
+        c, tot = F.coalesce(f"_c_{n}", F.lit(0)), F.col(f"_tot_{n}")
+        if not delta or ri is None:
+            return F.when(final, tot).otherwise(F.col(f"_run_{n}"))
+        # delta: each tick reports its own bucket; the final report adds
+        # what no periodic one did, the last bucket's counts when it lies
+        # past j_max
+        return F.when(
+            final, F.when(tot.isNotNull(), F.when(j > j_max, c).otherwise(0))
+        ).otherwise(F.when(r == j, c).otherwise(0))
+
+    flow_end = F.when(final, F.col("_last_ts")).otherwise(F.col("_run_last_ts"))
     fs = F.col("flow_start").cast("timestamp").cast("double")
-    fe = F.col("flow_end").cast("timestamp").cast("double")
-    result = out.select(
+    fe = flow_end.cast("timestamp").cast("double")
+    return out.select(
         *kcols,
         F.col("_flow").alias("flow_idx"),
-        F.timestamp_seconds(F.col("_report")).alias("report_ts"),
+        F.timestamp_seconds(report_at).alias("report_ts"),
         "flow_start",
-        "flow_end",
+        flow_end.alias("flow_end"),
         (fe - fs).alias("duration_s"),
-        "final",
-        *cnames,
+        final.alias("final"),
+        *[counter(n).alias(n) for n in cnames],
     )
-    # ownership of the persisted intermediates rides on the result (the
-    # dedup-module convention): callers that loop can free them eagerly
-    # with datapipe.dedup.release_intermediates; otherwise the
-    # ContextCleaner reclaims the (small) blocks on GC.
-    return _track(result, persisted=[per_bucket, flows])
 
 
 def flow_ecs_events(
@@ -360,9 +310,7 @@ def flow_ecs_events(
             )
         )
     )
-    from .datapipe.dedup import _track
-
-    return _track(rep.select(
+    return rep.select(
         id_expr.alias("flow_id"),
         *[F.col(k) for k in keys],
         "flow_idx",
@@ -384,4 +332,4 @@ def flow_ecs_events(
         "destination_bytes",
         (F.col("source_packets") + F.col("destination_packets")).alias("network_packets"),
         (F.col("source_bytes") + F.col("destination_bytes")).alias("network_bytes"),
-    ), inherit=[rep])
+    )

@@ -35,19 +35,7 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from ..aggregates import FlowConfigError
-
-
-def _grid(timeout_seconds: int, period_seconds: int) -> tuple[int, int, int]:
-    if timeout_seconds < 1:
-        raise FlowConfigError("invalid flow timeout (must be >= 1s)")
-    if 0 < period_seconds < 1:
-        raise FlowConfigError("invalid flow reporting period (must be >= 1s)")
-    tick = math.gcd(timeout_seconds, period_seconds) if period_seconds > 0 else timeout_seconds
-    tick = max(tick, 1)
-    ticks_timeout = max(1, timeout_seconds // tick)
-    ticks_period = max(1, period_seconds // tick) if period_seconds > 0 else 0
-    return tick, ticks_timeout, ticks_period
+from ..aggregates import _grid
 
 
 class _KeyFlowSim:

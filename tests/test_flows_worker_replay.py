@@ -110,6 +110,13 @@ def _spark_rows(spark, events, **kw):
         **kw,
     )
     rows = rep.collect()
+    # flow_idx numbers each key's flows 1, 2, ... in start order
+    starts: dict = {}
+    for r in rows:
+        starts.setdefault(r["key"], {})[r["flow_idx"]] = r["flow_start"]
+    for by_idx in starts.values():
+        assert sorted(by_idx) == list(range(1, len(by_idx) + 1))
+        assert [by_idx[i] for i in sorted(by_idx)] == sorted(by_idx.values())
     return {
         (
             r["key"],
@@ -178,11 +185,59 @@ def test_flow_reports_survives_gap_between_checks(spark):
     }
 
 
-def test_flow_config_errors():
-    """ErrInvalidTimeout (flows.go): timeout < 1s is a config error;
-    validation fires before any plan is built (df untouched)."""
+def _flow_reports_stream(df, keys, **kw):
+    from beats_spark.streaming.flows import flow_reports_stream
+
+    return flow_reports_stream(df, keys, t0_epoch=0, **kw)
+
+
+@pytest.mark.parametrize("cfg", [
+    dict(timeout_seconds=0),                      # ErrInvalidTimeout
+    dict(timeout_seconds=60, period_seconds=0.5),  # ErrInvalidPeriod
+], ids=["timeout0", "period0.5"])
+@pytest.mark.parametrize("fn", [flow_reports, _flow_reports_stream], ids=["batch", "stream"])
+def test_flow_config_errors(fn, cfg):
+    """ErrInvalidTimeout / ErrInvalidPeriod (flows.go): both twins share
+    one tick grid, and validation fires before any plan is built (df
+    untouched)."""
     with pytest.raises(FlowConfigError):
-        flow_reports(None, ["k"], timeout_seconds=0)
+        fn(None, ["k"], **cfg)
+
+
+@pytest.mark.parametrize("delta", [False, True], ids=["cumulative", "delta"])
+def test_flow_reports_null_counter_buckets(spark, delta):
+    """A bucket whose counter values are all NULL enters periodic and
+    delta values as 0; the final totals are SUM over the flow's buckets
+    (NULL only when every value of the flow is NULL)."""
+    base = 1_700_000_000
+    df = spark.createDataFrame(
+        [("k", base + 1.0, None), ("k", base + 25.0, 5), ("k", base + 33.0, None),
+         ("k", base + 55.0, None),
+         ("n", base + 2.0, None), ("n", base + 14.0, None)],
+        "key string, tsd double, b long",
+    ).select("key", F.timestamp_seconds("tsd").alias("ts"), "b")
+    rows = flow_reports(
+        df, ["key"], timeout_seconds=60, period_seconds=10, t0_epoch=base,
+        delta=delta, counters={"bytes": F.col("b")},
+    ).collect()
+
+    def series(key):
+        got = sorted(
+            (r["report_ts"].timestamp() - base, r["final"], r["bytes"])
+            for r in rows if r["key"] == key
+        )
+        return [(t, v) for t, fin, v in got if not fin], [v for *_, fin, v in got if fin]
+
+    # k: last event at +55 → killed at the +120 check; reports at +10..+110
+    periodic, final = series("k")
+    assert [t for t, _ in periodic] == [10.0 * i for i in range(1, 12)]
+    if delta:
+        assert [v for _, v in periodic] == [0, 0, 5] + [0] * 8 and final == [0]
+    else:
+        assert [v for _, v in periodic] == [0, 0] + [5] * 9 and final == [5]
+    # n: every value NULL → periodic 0, final NULL
+    periodic, final = series("n")
+    assert {v for _, v in periodic} == {0} and final == [None]
 
 
 def test_flow_ecs_event_shape(spark):

@@ -17,6 +17,8 @@ fix; they now run in seconds.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -132,6 +134,15 @@ class TestFlowAndSpanPlanShape:
         assert "CartesianProduct" not in s and "BroadcastNestedLoopJoin" not in s
         assert "partial_" in s  # map-side combine on the keyed aggregates
         assert len(s) < PLAN_CHARS_MAX
+        # one keyed pass: segmentation, bucket aggregate and the per-flow
+        # window all ride a single exchange on the key; nothing is
+        # cached, joined back or unioned
+        exchanges = [ln for ln in s.splitlines() if "Exchange " in ln]
+        assert len(exchanges) == 1, s
+        assert re.search(r"hashpartitioning\(key#\d+, ", exchanges[0]), s
+        assert len(re.findall(r"\bSort \[", s)) <= 2, s
+        assert "InMemoryRelation" not in s and "InMemoryTableScan" not in s, s
+        assert "Join" not in s and "Union" not in s, s
 
     def test_dup_span_stats_plan_shape(self, spark):
         from beats_spark.datapipe.dedup import dup_span_stats
