@@ -21,6 +21,10 @@ LOG_FILES = [
     "audit-ubuntu1604.log", "useradd.log", "test.log", "execve.log", "rare.log",
 ]
 
+needs_ref = pytest.mark.skipif(
+    not os.path.isdir(TESTDATA), reason="reference testdata not present"
+)
+
 
 def _fields_of(line: str) -> dict:
     fields, _ts, err = parse_auditd_line(line)
@@ -32,6 +36,7 @@ def _fields_of(line: str) -> dict:
     return got
 
 
+@needs_ref
 @pytest.mark.parametrize("log_file", LOG_FILES)
 def test_golden_corpus(log_file):
     lines = [
@@ -143,6 +148,7 @@ def test_unknown_syscall_number_falls_back_numeric():
 
 
 # --- Spark stage ---
+@needs_ref
 def test_auditd_parse_distributed_matches_driver(spark):
     lines = []
     for log_file in LOG_FILES:

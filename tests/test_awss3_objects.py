@@ -26,6 +26,10 @@ from beats_spark.awss3.objects import (
 
 TESTDATA = "/root/reference/x-pack/filebeat/input/awss3/testdata"
 
+needs_ref = pytest.mark.skipif(
+    not os.path.isdir(TESTDATA), reason="reference testdata not present"
+)
+
 
 def load(name: str) -> bytes:
     with open(os.path.join(TESTDATA, name), "rb") as f:
@@ -55,12 +59,14 @@ def run_object(filename: str, content_type: str,
 
 # --------------------------------------------- TestS3ObjectProcessor
 
+@needs_ref
 def test_download_text_plain():
     events = run_object("log.txt", "text/plain")
     assert [e["message"] for e in events] == ["logline1", "logline2"]
     assert [e["offset"] for e in events] == [0, 9]
 
 
+@needs_ref
 def test_multiline_content():
     reader = ReaderConfig(parsers=[{"multiline": {
         "pattern": "^<Event", "negate": True, "match": "after"}}])
@@ -70,6 +76,7 @@ def test_multiline_content():
     assert events[1]["offset"] > 0
 
 
+@needs_ref
 def test_application_json_content_type():
     events = run_object("log.json", "application/json")
     assert len(events) == 2
@@ -79,11 +86,13 @@ def test_application_json_content_type():
     assert events[0]["message"].startswith('{"@timestamp"')
 
 
+@needs_ref
 def test_ndjson_content_type():
     events = run_object("log.ndjson", "application/x-ndjson")
     assert len(events) == 2
 
 
+@needs_ref
 def test_ndjson_parser_without_message_key_not_dropped():
     # s3_objects_test.go's regression case: ndjson parser moves data
     # into fields and clears content; readFile must still publish
@@ -93,6 +102,7 @@ def test_ndjson_parser_without_message_key_not_dropped():
     assert events[0]["fields"]["message"] == "error making http request"
 
 
+@needs_ref
 def test_configured_content_type_overrides():
     reader = ReaderConfig(content_type="application/json")
     events = run_object("multiline.json", "application/octet-stream",
@@ -100,16 +110,19 @@ def test_configured_content_type_overrides():
     assert len(events) == 2
 
 
+@needs_ref
 def test_gzip_sniffed_json():
     events = run_object("multiline.json.gz", "application/json")
     assert len(events) == 2
 
 
+@needs_ref
 def test_unparsable_json_raises():
     with pytest.raises(ValueError, match="failed to decode json"):
         run_object("invalid.json", "application/json")
 
 
+@needs_ref
 def test_split_array():
     reader = ReaderConfig(expand_event_list_from_field="Events")
     events = run_object("events-array.json", "application/json", reader)
@@ -120,6 +133,7 @@ def test_split_array():
     assert events[0]["offset"] < events[1]["offset"]
 
 
+@needs_ref
 def test_split_array_missing_key_raises():
     reader = ReaderConfig(expand_event_list_from_field="Records")
     with pytest.raises(ValueError,
@@ -128,6 +142,7 @@ def test_split_array_missing_key_raises():
         run_object("events-array.json", "application/json", reader)
 
 
+@needs_ref
 def test_split_root_array():
     reader = ReaderConfig(expand_event_list_from_field=".[]")
     events = run_object("array.json", "application/json", reader)
@@ -135,11 +150,13 @@ def test_split_root_array():
     assert json.loads(events[1]["message"])["msg"] == "world"
 
 
+@needs_ref
 def test_root_array_without_expand_is_one_event():
     events = run_object("array.json", "application/json")
     assert len(events) == 1
 
 
+@needs_ref
 def test_events_have_unique_repeatable_id():
     events = run_object("log.txt", "text/plain")
     ids = [e["meta_id"] for e in events]
@@ -152,11 +169,13 @@ def test_empty_download_raises():
         list(process_s3_object(None, s3event("k"), ReaderConfig()))
 
 
+@needs_ref
 def test_no_content_type_reads_lines():
     events = run_object("log.txt", "")
     assert len(events) == 2
 
 
+@needs_ref
 def test_no_eol_final_line_collected():
     # CollectOnEOF: a final line without a terminator still publishes
     assert len(run_object("no-eol.txt", "text/plain")) == 1
@@ -165,6 +184,7 @@ def test_no_eol_final_line_collected():
 
 # ----------------------------------------------------- decoding_test.go
 
+@needs_ref
 def test_parquet_vpc_flow_counts():
     for cfg in ({"batch_size": 1}, {"batch_size": 100}, {}):
         reader = ReaderConfig(decoding={"codec": {"parquet":
@@ -174,6 +194,7 @@ def test_parquet_vpc_flow_counts():
         assert len(events) == 1304
 
 
+@needs_ref
 def test_parquet_cloudtrail_content_check():
     reader = ReaderConfig(decoding={"codec": {"parquet": {
         "enabled": True, "batch_size": 1}}})
@@ -185,6 +206,7 @@ def test_parquet_cloudtrail_content_check():
     assert json.loads(events[0]["message"]) == expected[0]
 
 
+@needs_ref
 @pytest.mark.parametrize("filename", ["txn.csv", "txn.csv.gz"])
 def test_csv_txn_content_check(filename):
     reader = ReaderConfig(decoding={"codec": {"csv": {

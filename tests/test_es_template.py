@@ -4,6 +4,8 @@ end-to-end."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from beats_spark.es_template import (
@@ -15,6 +17,11 @@ from beats_spark.es_template import (
 )
 
 FIELDS_YML = "/root/reference/libbeat/template/testdata/fields.yml"
+
+needs_ref = pytest.mark.skipif(
+    not os.path.isdir(os.path.dirname(FIELDS_YML)),
+    reason="reference testdata not present",
+)
 
 
 def P(version="7.0.0", **kw):
@@ -416,6 +423,7 @@ def test_load_minimal():
     assert body["index_patterns"] == ["filebeat-8.0.0*"]
 
 
+@needs_ref
 def test_reference_fields_yml_end_to_end():
     """The reference's own testdata/fields.yml through the full load —
     every declared behavior lands in the body."""

@@ -32,6 +32,10 @@ from beats_spark.gcs.input import (
 
 TESTDATA = "/root/reference/x-pack/filebeat/input/gcs/testdata"
 
+needs_ref = pytest.mark.skipif(
+    not os.path.isdir(TESTDATA), reason="reference testdata not present"
+)
+
 # the reference mock's content-type mapping (mock/mock.go:70-82)
 CONTENT_TYPES = {
     "multiline.json": "application/octet-stream",
@@ -162,6 +166,7 @@ def run_bucket(srv, bucket, **src_extra):
 
 # ------------------------------------------------------ read-case matrix
 
+@needs_ref
 def test_read_json(srv):
     # mock.BeatsFilesBucket_log_json — raw value bytes preserved; the
     # mock's JSON bucket holds log.json AND events-array.json
@@ -184,6 +189,7 @@ def test_read_json(srv):
     assert recs[0]["object_uri"] == "gs://beatsjsonbucket/log.json"
 
 
+@needs_ref
 def test_read_octet_stream_json(srv):
     srv.put_testdata("beatsmultilinejsonbucket", "multiline.json")
     recs, _ = run_bucket(srv, "beatsmultilinejsonbucket")
@@ -192,6 +198,7 @@ def test_read_octet_stream_json(srv):
         "error making request"
 
 
+@needs_ref
 def test_read_ndjson(srv):
     srv.put_testdata("beatsndjsonbucket", "log.ndjson")
     recs, _ = run_bucket(srv, "beatsndjsonbucket")
@@ -203,6 +210,7 @@ def test_read_ndjson(srv):
     ]
 
 
+@needs_ref
 def test_read_multiline_gz_json(srv):
     srv.put_testdata("beatsgzjsonbucket", "multiline.json.gz")
     recs, _ = run_bucket(srv, "beatsgzjsonbucket")
@@ -211,6 +219,7 @@ def test_read_multiline_gz_json(srv):
         "available disk space 44.3gb"
 
 
+@needs_ref
 def test_read_json_with_root_as_array(srv):
     # BeatsFilesBucket_json_array: object elements publish raw, and
     # ARRAY elements publish raw too (nested-arrays.json)
@@ -225,6 +234,7 @@ def test_read_json_with_root_as_array(srv):
     assert nested[0][0]["msg"] == "hello" or nested[0][0]["msg"] == "hi"
 
 
+@needs_ref
 def test_expand_event_list_from_field(srv):
     srv.put_testdata("beatseventsarraybucket", "events-array.json")
     recs, _ = run_bucket(srv, "beatseventsarraybucket",
@@ -237,6 +247,7 @@ def test_expand_event_list_from_field(srv):
     assert recs[0]["offset"] < recs[1]["offset"]
 
 
+@needs_ref
 def test_read_csv(srv):
     srv.put_testdata("beatscsvbucket", "txn1.csv")
     recs, _ = run_bucket(

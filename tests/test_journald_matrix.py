@@ -15,6 +15,7 @@ NULL in a bigint column ("SYSLOG_PID": "" below).
 from __future__ import annotations
 
 import json
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -32,6 +33,15 @@ from beats_spark.processors.journald import (
 )
 
 REF = "/root/reference/filebeat/input/journald"
+
+needs_ref = pytest.mark.skipif(
+    not os.path.isdir(f"{REF}/testdata"),
+    reason="reference testdata not present",
+)
+needs_journalctl_ref = pytest.mark.skipif(
+    not os.path.isdir(f"{REF}/pkg/journalctl/testdata"),
+    reason="reference testdata not present",
+)
 
 
 def _convert(spark, fields: dict[str, str], **kw):
@@ -211,6 +221,7 @@ def test_timestamp_and_remote_hostname(spark):
 # ---------------------------------------------------------------------------
 # journalctl JSON corners (pkg/journalctl/testdata)
 # ---------------------------------------------------------------------------
+@needs_journalctl_ref
 def test_json_corner_cases_binary_message(spark):
     cases = json.load(open(f"{REF}/pkg/journalctl/testdata/corner-cases.json"))
     lines = [(json.dumps(c),) for c in cases]
@@ -223,6 +234,7 @@ def test_json_corner_cases_binary_message(spark):
         assert got["message"] == want
 
 
+@needs_journalctl_ref
 def test_sample_journal_event_end_to_end(spark):
     line = open(f"{REF}/pkg/journalctl/testdata/sample-journal-event.json").read()
     df = spark.createDataFrame([(line.replace("\n", ""),)], "line string")
@@ -239,6 +251,7 @@ def test_sample_journal_event_end_to_end(spark):
 # ---------------------------------------------------------------------------
 # journal export format (testdata/binary.export — real journalctl output)
 # ---------------------------------------------------------------------------
+@needs_ref
 def test_export_blob_binary_frames():
     blob = open(f"{REF}/testdata/binary.export", "rb").read()
     entries = parse_export_blob(blob)
@@ -252,6 +265,7 @@ def test_export_blob_binary_frames():
     assert all("__REALTIME_TIMESTAMP" in e for e in entries)
 
 
+@needs_ref
 def test_export_parse_distributed_matches_driver(spark):
     blob = open(f"{REF}/testdata/binary.export", "rb").read()
     df = spark.createDataFrame([(bytearray(blob),)], "value binary")
@@ -308,6 +322,7 @@ def test_include_matches_semantics(spark):
     )
 
 
+@needs_ref
 def test_reference_golden_events_end_to_end(spark):
     """TestCompareGoSystemdWithJournalctl (input_test.go:137) replayed:
     the reference's golden events file — generated by its LEGACY
@@ -433,6 +448,7 @@ FILTER_CASES = [
 ]
 
 
+@needs_ref
 @pytest.mark.parametrize(
     "name,cfg,want", FILTER_CASES, ids=[c[0] for c in FILTER_CASES]
 )
@@ -443,6 +459,7 @@ def test_input_filtering_matrix(spark, name, cfg, want):
     assert _filtered_messages(spark, **cfg) == want
 
 
+@needs_ref
 def test_transport_and_facility_filters(spark):
     # reader.go:313-323: _TRANSPORT= / SYSLOG_FACILITY= raw matches
     assert _filtered_messages(spark, transports=["syslog"]) == [

@@ -25,7 +25,7 @@ from beats_spark.processors import netflow_v9 as N
 
 BASE = "/root/reference/x-pack/filebeat/input/netflow/testdata"
 
-pytestmark = pytest.mark.skipif(
+needs_ref = pytest.mark.skipif(
     not os.path.isdir(BASE), reason="reference testdata not present"
 )
 
@@ -38,6 +38,8 @@ def _golden_name(test_name: str) -> str:
 
 
 def _dat_cases():
+    if not os.path.isdir(BASE):
+        return []
     tests = yaml.safe_load(open(BASE + "/dat_tests.yaml"))["tests"]
     return sorted(tests.items())
 
@@ -59,6 +61,7 @@ def _run_dat(tc: dict):
     return events
 
 
+@needs_ref
 @pytest.mark.parametrize(
     "name,tc", _dat_cases(), ids=[n for n, _ in _dat_cases()]
 )
@@ -114,6 +117,7 @@ def _pcap_names():
     )
 
 
+@needs_ref
 @pytest.mark.parametrize("name", _pcap_names())
 def test_pcap_golden(name):
     golden = json.load(open(f"{BASE}/golden/{name}.pcap.golden.json"))
@@ -198,6 +202,7 @@ def _all_pcap_datagrams():
     return rows
 
 
+@needs_ref
 def test_netflow_v9_events_distributed_matches_sequential(spark):
     rows = _all_pcap_datagrams()
     df = spark.createDataFrame(rows, "payload binary, source string, order long")
@@ -223,6 +228,7 @@ def test_netflow_v9_events_distributed_matches_sequential(spark):
     assert len(got) == 45  # 29 + 6 + 10 golden events
 
 
+@needs_ref
 def test_netflow_v9_events_sequential_stage(spark):
     rows = _all_pcap_datagrams()
     df = spark.createDataFrame(rows, "payload binary, source string, order long")
@@ -357,6 +363,7 @@ def test_v8_unknown_aggregation_is_error():
 # ---------------------------------------------------------------------------
 # streaming decode: template state survives across micro-batches
 # ---------------------------------------------------------------------------
+@needs_ref
 def test_netflow_v9_stream_state_across_batches(spark, tmp_path):
     """Live applyInPandasWithState decode: the template-bearing packets
     arrive in micro-batch 1 (one file per trigger), the data packets in
@@ -418,6 +425,7 @@ def test_netflow_v9_stream_state_across_batches(spark, tmp_path):
     assert len(got) == 10  # the golden's event count for this capture
 
 
+@needs_ref
 def test_netflow_corruption_robustness():
     """decode_buffer over truncated / bit-flipped packets must stop at
     the first undecodable packet (the harness contract) and never raise
