@@ -1560,7 +1560,7 @@ def q_decode_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_multiline_while(spark: SparkSession, sf_dir: str) -> DataFrame:
     """multiline while-mode: consecutive matching lines join, others solo."""
-    from beats_spark.processors.misc import multiline_while
+    from beats_spark.processors.stateful import multiline_while
 
     t = synth.transcripts(spark, sf_dir)
     out = multiline_while(pattern="^level ", group_cols=["conv_id"], order_col="turn_idx")(t)

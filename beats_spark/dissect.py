@@ -20,9 +20,12 @@ Grammar recap: a tokenizer is alternating literal delimiters and
 
 Execution strategies (chosen at compile time on the driver):
   1. **Column fast path** — for patterns with only normal/skip/greedy
-     captures and non-empty literal delimiters, lower to ONE anchored
-     lazy regex evaluated by Catalyst (`rlike` + `regexp_extract`): pure
-     JVM, whole-stage codegen, zero Python on the hot path.
+     captures and non-empty literal delimiters, the reference's
+     sequential walk becomes a chain of literal `locate` + `substr`
+     Column expressions (`Dissector.locate_plan`; greedy padding via
+     `ltrim`): pure JVM, whole-stage codegen, no regex and zero Python
+     on the hot path.  `regex_pattern` is the eligibility test and the
+     equivalent anchored regex the tests compare against.
   2. **Arrow UDF path** — full grammar, implemented with *vectorized*
      pandas string ops over Arrow batches (first-occurrence splits via
      ``Series.str.split(n=1)``); no per-row Python except final dict
@@ -388,10 +391,12 @@ class Dissector:
     # -- Column fast path ----------------------------------------------------
 
     def regex_pattern(self) -> str | None:
-        """Anchored lazy-regex equivalent, or None when the grammar needs the
-        UDF path.  Eligible: normal/skip captures, no fixed-length, no
-        append/indirect/pointer/named-skip, non-empty middle delimiters,
-        greedy only before single-char delimiters."""
+        """Anchored lazy-regex equivalent of the sequential walk, or None
+        when the grammar needs the UDF path.  Eligible: normal/skip
+        captures, no fixed-length, no append/indirect/pointer/named-skip,
+        non-empty middle delimiters, greedy only before single-char
+        delimiters.  Greedy padding is possessive: the walk never gives
+        a padding character back to a later capture."""
         for i, f in enumerate(self.fields):
             if f.kind not in (NORMAL, SKIP):
                 return None
@@ -413,48 +418,25 @@ class Dissector:
                 parts.append("(.*?)")
                 parts.append(re.escape(trailing))
                 if f.greedy:
-                    parts.append(f"(?:{re.escape(trailing)})*")
+                    parts.append(f"(?:{re.escape(trailing)})*+")
                 if last:
                     parts.append(".*$")
         return "(?s)" + "".join(parts)
 
-    def column_plan(self, col: Column) -> tuple[Column, dict[str, Column]] | None:
-        """(matched_predicate, {key: string Column}) — pure-Catalyst plan:
-        one regexp_extract per key (k+1 regex passes; measured fastest at
-        all key counts on JVM regex)."""
-        pattern = self.regex_pattern()
-        if pattern is None:
-            return None
-        matched = col.rlike(pattern)
-        out: dict[str, Column] = {}
-        group = 0
-        for f in self.fields:
-            group += 1
-            if f.kind == SKIP:
-                continue
-            v = F.regexp_extract(col, pattern, group)
-            out[f.key] = self._trim_col(v)
-        return matched, out
-
     def locate_plan(self, col: Column) -> tuple[Column, dict[str, Column]] | None:
-        """(matched_predicate, {key: string Column}) — literal-substring
-        sequential-find plan, NO regex (r6 optimization, guide §1.2
-        step 2: the dissect grammar's delimiters are literals, so the
-        reference's own extract walk — find next delimiter, slice — is
-        expressible as a locate/substr chain that stays in
-        WholeStageCodegen at a fraction of java.util.regex cost).
+        """(matched_predicate, {key: string Column}) — the reference's
+        sequential walk (_extract_scalar) as a literal locate/substr
+        chain, no regex: find the next delimiter from the current
+        position, capture up to it, step past it. A greedy `%{k->}`
+        (single-char delimiter c only, see regex_pattern) steps past the
+        whole run of c found there: the next field starts at
+        length(col) + 1 - length(ltrim(substr(col, p), c)).
 
-        Semantics: exactly the reference's sequential walk
-        (_extract_scalar). This differs from the lazy-regex plan ONLY
-        when sequential-find FAILS but the regex could backtrack to a
-        later delimiter occurrence and still match — so callers keep the
-        regex plan as the fallback for rows this plan rejects:
-        locate-success ⇒ regex-success with identical captures (the lazy
-        regex tries the sequential-find positions first).
-
-        Eligible: everything regex_pattern() accepts EXCEPT greedy
-        (padding-skip needs overlapping-occurrence stepping)."""
-        if self.regex_pattern() is None or any(f.greedy for f in self.fields):
+        Eligible: exactly what regex_pattern() accepts; that pattern
+        (lazy captures, possessive padding) matches with identical
+        captures wherever this walk succeeds and fails wherever it
+        fails."""
+        if self.regex_pattern() is None:
             return None
         d0 = self.delimiters[0]
         conds: list[Column] = []
@@ -471,7 +453,11 @@ class Dissector:
                 p = F.call_function("locate", F.lit(trailing), col, pos)
                 conds.append(p > 0)
                 cap = col.substr(pos, p - pos)
-                pos = p + F.lit(len(trailing))
+                if f.greedy:
+                    pad = F.ltrim(col.substr(p, F.length(col)), F.lit(trailing))
+                    pos = F.length(col) + 1 - F.length(pad)
+                else:
+                    pos = p + F.lit(len(trailing))
             if f.kind != SKIP:
                 out[f.key] = self._trim_col(cap)
         matched = conds[0] if conds else F.lit(True)
@@ -728,10 +714,11 @@ def dissect_columns(
 ) -> DataFrame:
     """Dissect `src` into one top-level string column per capture key.
 
-    Uses the pure-Column fast path when the tokenizer allows it (the hot
-    path — stays inside WholeStageCodegen); otherwise an Arrow-batched
-    struct UDF. Parse failure ⇒ NULL columns + `dissect_parsing_error`
-    appended to log_flags (processor.go:107-117 semantics).
+    Uses the locate/substr Column plan when the tokenizer allows it (the
+    hot path — stays inside WholeStageCodegen); otherwise an
+    Arrow-batched struct UDF. Parse failure ⇒ NULL columns +
+    `dissect_parsing_error` appended to log_flags (processor.go:107-117
+    semantics).
 
     Processor-level semantics (processor.go:83-105, r5 matrix port):
       * `prefix` is the target_prefix analog under the engine's flat
@@ -763,32 +750,15 @@ def dissect_columns(
         return cast_column(v, types[k]) if k in types else v
 
     col = F.col(src)
-    plan = d.column_plan(col)
+    plan = d.locate_plan(col)
     if plan is not None:
         matched, cols = plan
-        # errEmpty parity: an empty input string is a parse failure even if
-        # the regex technically matches it (dissect.go:58-60).
+        # errEmpty parity: an empty input string is a parse failure
+        # (dissect.go:58-60).
         matched = matched & (F.length(col) > 0)
-        loc = d.locate_plan(col)
-        if loc is not None:
-            # regex-free sequential-find plan with the regex as fallback:
-            # locate-success ⇒ regex-success with identical captures (see
-            # locate_plan), so row results are bit-identical to the pure
-            # regex plan while the hot path runs literal substring
-            # searches inside codegen (r6; measured ~2× on the flagship
-            # parse stage). The fallback only evaluates on rows the
-            # sequential walk rejects (malformed lines + the rare
-            # backtracking corner).
-            m_loc, cols_loc = loc
-            m_loc = m_loc & (F.length(col) > 0)
-            for k in out_keys:
-                v = F.when(m_loc, cols_loc[k]).otherwise(F.when(matched, cols[k]))
-                df = df.withColumn(prefix + k, _typed(k, v))
-            fail_cond = ~F.coalesce(m_loc | matched, F.lit(False))
-        else:
-            for k in out_keys:
-                df = df.withColumn(prefix + k, _typed(k, F.when(matched, cols[k])))
-            fail_cond = ~F.coalesce(matched, F.lit(False))
+        for k in out_keys:
+            df = df.withColumn(prefix + k, _typed(k, F.when(matched, cols[k])))
+        fail_cond = ~F.coalesce(matched, F.lit(False))
     else:
         struct_type = ", ".join(f"`{k}` string" for k in out_keys)
 

@@ -4,8 +4,9 @@ This is the Spark re-expression of the filebeat event data path
 (SURVEY.md §3.1): scan → reader/parse chain → processors → selector →
 per-sink fan-out + flows-style aggregates. The whole chain up to the
 aggregates compiles into a single Catalyst plan: one parquet scan, one
-Project span with the dissect regexes + casts + enrich-broadcast-joins,
-no exchange until the windowed aggregates / fan-out write.
+Project span with the dissect locate/substr walks + casts +
+enrich-broadcast-joins, no exchange until the windowed aggregates /
+fan-out write.
 
 Stage list (FIXTURES.md §§1,4,5):
  1. dissect `text` with the flagship tokenizer (Column fast path) →
@@ -103,7 +104,7 @@ def route_events(df: DataFrame) -> DataFrame:
 
     The drop_event predicate is guarded by an always-false
     spark_partition_id() disjunct: the predicate references parse
-    outcomes (`_f_dissect` ⇐ the dissect regex), and Catalyst's filter
+    outcomes (`_f_dissect` ⇐ the dissect walk), and Catalyst's filter
     pushdown SUBSTITUTES the referenced expressions when pushing the
     filter through the parse Projects — the r5 plan evaluated the full
     text-construction subtree 4× and the flagship regex twice extra per

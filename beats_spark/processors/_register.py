@@ -111,7 +111,7 @@ REGISTRY.update(
         "schema_conv": misc.schema_conv,
         "decode_xml": misc.decode_xml,
         "decode_xml_wineventlog": misc.decode_xml_wineventlog,
-        "multiline_while": misc.multiline_while,
+        "multiline_while": stateful.multiline_while,
     }
 )
 

@@ -9,7 +9,6 @@
   codec_format     outputs/codec/format/format.go:38 (fmtstr line)
   schema_conv      common/schema/schema.go:30-60 (declarative projection)
   decode_xml       decode_xml/decode_xml.go:53 (gated: needs from_xml)
-  multiline_while  reader/multiline/while.go
 """
 
 from __future__ import annotations
@@ -17,7 +16,7 @@ from __future__ import annotations
 from typing import Any, Callable
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..conditions import compile_condition
@@ -709,56 +708,3 @@ def decode_xml_wineventlog(
 
     return stage
 
-
-def multiline_while(
-    pattern: str,
-    negate: bool = False,
-    group_cols: list[str] | None = None,
-    order_col: str = "turn_idx",
-    text_col: str = "text",
-    max_lines: int = 500,
-    sep: str = "\n",
-    timeout_seconds: float | None = None,
-    ts_col: str = "ts",
-    max_content_bytes: int | None = None,
-):
-    """multiline/while.go — join CONSECUTIVE lines while pattern matches;
-    a non-matching line is its own single-line event. The shared message
-    buffer's finalize (multiline flag, byte cap, member-flag union)
-    applies like every other multiline mode (message_buffer.go), and so
-    do max_lines (while.go:57-59) and timeout (while.go:63-69 wraps the
-    same TimeoutReader as pattern mode — here, as everywhere in this
-    engine, the wall-clock idle flush becomes an event-time gap split):
-    an oversized run keeps its FIRST max_lines lines + truncated flag;
-    a gap > timeout starts a new event even mid-run."""
-    groups = group_cols or ["conv_id"]
-
-    def stage(df: DataFrame) -> DataFrame:
-        from .stateful import _cap_and_flags, _finalize_buffer, _ordered_join
-
-        matches = F.col(text_col).rlike(pattern)
-        in_run = ~matches if negate else matches
-        w0 = Window.partitionBy(*groups).orderBy(order_col)
-        prev_in_run = F.lag(in_run, 1, False).over(w0)
-        # boundary: not in a run, or run just started
-        boundary = (~in_run) | (in_run & ~F.coalesce(prev_in_run, F.lit(False)))
-        if timeout_seconds is not None:
-            epoch = F.unix_micros(F.col(ts_col).cast("timestamp")) / 1e6
-            gap = epoch - F.lag(epoch, 1).over(w0)
-            boundary = boundary | (F.coalesce(gap, F.lit(0.0)) > timeout_seconds)
-        w = Window.partitionBy(*groups).orderBy(order_col).rowsBetween(Window.unboundedPreceding, 0)
-        df = df.withColumn("_ml_grp", F.sum(boundary.cast("int")).over(w))
-        df, flags_agg = _cap_and_flags(df, groups, order_col, max_lines)
-        agg = (
-            df.groupBy(*groups, "_ml_grp")
-            .agg(
-                F.min(order_col).alias(order_col),
-                _ordered_join(order_col, text_col, sep),
-                F.count(F.lit(1)).alias("n_lines"),
-                flags_agg,
-            )
-            .drop("_ml_grp")
-        )
-        return _finalize_buffer(agg, text_col, max_content_bytes)
-
-    return stage

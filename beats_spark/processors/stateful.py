@@ -1,7 +1,9 @@
 """Stateful / windowed operators (SURVEY.md §2.7).
 
 rate_limit   ratelimit/rate_limit.go:45-100 (token_bucket per key)
-multiline    reader/multiline/{pattern,counter,while}.go
+multiline    reader/multiline/{pattern,counter,while}.go — each mode only
+             decides where an event starts; one fold (_message_buffer,
+             message_buffer.go) joins, caps and flags for all three
 timeseries   processors/timeseries (instance hash of dimensions)
 
 Batch semantics: the token bucket's steady state admits `limit` events
@@ -29,7 +31,7 @@ Scale notes:
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..events import FLAG_MULTILINE, FLAG_TRUNCATED, FLAGS_COL
@@ -92,6 +94,93 @@ def rate_limit(
     return stage
 
 
+def _event_ids(boundary: Column, groups, order_col: str) -> Column:
+    """Event id = running sum of boundary flags over (group, order) — the
+    session-grouping window idiom for the reader's sequential loop."""
+    w = Window.partitionBy(*groups).orderBy(order_col).rowsBetween(Window.unboundedPreceding, 0)
+    return F.sum(boundary.cast("int")).over(w)
+
+
+def _gap_boundary(groups, order_col: str, ts_col: str, timeout_seconds: float) -> Column:
+    """flush-on-idle (pattern.go:88-94; while.go:63-69 wraps the same
+    TimeoutReader): a gap larger than the timeout starts a new logical
+    event even mid-continuation — the wall-clock idle flush becomes an
+    event-time gap split. unix_micros via an explicit TIMESTAMP cast:
+    parquet columns arrive as TIMESTAMP_NTZ, which has no direct
+    numeric cast."""
+    w = Window.partitionBy(*groups).orderBy(order_col)
+    epoch = F.unix_micros(F.col(ts_col).cast("timestamp")) / 1e6
+    gap = epoch - F.lag(epoch, 1).over(w)
+    return F.coalesce(gap, F.lit(0.0)) > timeout_seconds
+
+
+def _message_buffer(
+    df: DataFrame,
+    event_id: Column,
+    groups,
+    order_col: str,
+    text_col: str,
+    sep: str,
+    max_lines: int | None,
+    max_content_bytes: int | None,
+    ts_col: str | None = None,
+) -> DataFrame:
+    """message_buffer.go — the fold every multiline mode shares; a mode
+    only decides where an event starts (`event_id`). One row per event
+    (groups, first order_col, [min ts_col], ordered join of the lines,
+    n_lines, member-flag union).
+
+    `max_lines` (None: no cap): an oversized event keeps its FIRST
+    max_lines lines, drops the rest and carries the truncated flag — no
+    sub-split into extra events. finalize() (:126-134): the `multiline`
+    flag when more than one line contributed; `max_content_bytes` caps
+    the JOINED content (separators count, like addLine's space
+    accounting) with the truncated flag, via truncate_fields' UTF-8-safe
+    byte cut. Every window shares the group-key partitioning, so the
+    fold adds no exchange beyond the one the groups need."""
+    df = df.withColumn("_ml_grp", event_id)
+    empty = F.array().cast("array<string>")
+    if FLAGS_COL in df.columns:
+        flags = F.flatten(F.collect_list(F.coalesce(F.col(FLAGS_COL), empty)))
+    else:
+        flags = empty
+    if max_lines is not None:
+        wg = Window.partitionBy(*groups, "_ml_grp").orderBy(order_col)
+        wsz = Window.partitionBy(*groups, "_ml_grp")
+        df = (
+            df.withColumn("_ml_rn", F.row_number().over(wg))
+            .withColumn("_ml_sz", F.count(F.lit(1)).over(wsz))
+            .filter(F.col("_ml_rn") <= max_lines)
+        )
+        trunc = F.when(F.max("_ml_sz") > max_lines, F.array(F.lit(FLAG_TRUNCATED))).otherwise(empty)
+        flags = F.concat(flags, trunc)
+    # keep the TS COLUMN THE STAGE READS (a custom ts_col must not be
+    # replaced by a NULL literal 'ts')
+    first_ts = []
+    if ts_col is not None:
+        first_ts = [F.min(ts_col).alias(ts_col) if ts_col in df.columns else F.lit(None).alias(ts_col)]
+    agg = (
+        df.groupBy(*groups, "_ml_grp")
+        .agg(
+            F.min(order_col).alias(order_col),
+            *first_ts,
+            _ordered_join(order_col, text_col, sep),
+            F.count(F.lit(1)).alias("n_lines"),
+            flags.alias(FLAGS_COL),
+        )
+        .drop("_ml_grp")
+    )
+    ml = F.when(F.col("n_lines") > 1, F.array(F.lit(FLAG_MULTILINE))).otherwise(empty)
+    agg = agg.withColumn(FLAGS_COL, F.concat(F.col(FLAGS_COL), ml))
+    if max_content_bytes is not None:
+        from .actions import truncate_fields
+
+        agg = truncate_fields([text_col], max_bytes=max_content_bytes)(agg)
+    # dedup LAST: truncate_fields may append a 'truncated' the member
+    # lines already carried
+    return agg.withColumn(FLAGS_COL, F.array_distinct(F.col(FLAGS_COL)))
+
+
 def multiline_pattern(
     pattern: str,
     match: str = "after",
@@ -111,111 +200,35 @@ def multiline_pattern(
     A line L is a *continuation* when (pattern matches L) XOR negate —
     with match='after' the flag applies to the line itself; with
     match='before' a matching line joins the FOLLOWING line's group.
-    Group id = running sum of boundary flags over (group, order) — the
-    session-grouping window idiom for the reader's sequential loop.
     `flush_pattern` (pattern.go:44-129): a line matching it is the LAST
     line of its event — the event flushes immediately and the next line
-    starts a new one regardless of continuation state.
-    Emits one row per logical event: first line's metadata, joined text,
-    line count; a group longer than max_lines keeps its first max_lines
-    lines, drops the rest, and carries the `truncated` flag.
+    starts a new one regardless of continuation state. The event keeps
+    the first line's order and ts; the rest is the shared message
+    buffer (`_message_buffer`: joined text, line count, max_lines cap,
+    flags).
     """
     groups = group_cols or ["conv_id"]
 
     def stage(df: DataFrame) -> DataFrame:
+        w0 = Window.partitionBy(*groups).orderBy(order_col)
         matches = F.col(text_col).rlike(pattern)
         is_continuation = ~matches if negate else matches
         if match == "after":
             boundary = ~is_continuation
         else:  # 'before': line joins the following one ⇒ boundary when the PREVIOUS line did not match
-            w0 = Window.partitionBy(*groups).orderBy(order_col)
             prev_cont = F.lag(is_continuation, 1, False).over(w0)
             boundary = ~F.coalesce(prev_cont, F.lit(False))
         if flush_pattern is not None:
-            wf = Window.partitionBy(*groups).orderBy(order_col)
-            prev_flush = F.lag(F.col(text_col).rlike(flush_pattern), 1, False).over(wf)
+            prev_flush = F.lag(F.col(text_col).rlike(flush_pattern), 1, False).over(w0)
             boundary = boundary | F.coalesce(prev_flush, F.lit(False))
         if timeout_seconds is not None:
-            # flush-on-idle (multiline/pattern.go:88-94): a gap larger than
-            # the timeout starts a new logical event even mid-continuation.
-            wt = Window.partitionBy(*groups).orderBy(order_col)
-            # unix_micros via an explicit TIMESTAMP cast: parquet columns
-            # arrive as TIMESTAMP_NTZ, which has no direct numeric cast.
-            epoch = F.unix_micros(F.col(ts_col).cast("timestamp")) / 1e6
-            gap = epoch - F.lag(epoch, 1).over(wt)
-            boundary = boundary | (F.coalesce(gap, F.lit(0.0)) > timeout_seconds)
-        w = Window.partitionBy(*groups).orderBy(order_col).rowsBetween(Window.unboundedPreceding, 0)
-        df = df.withColumn("_ml_grp", F.sum(boundary.cast("int")).over(w))
-        df, flags_agg = _cap_and_flags(df, groups, order_col, max_lines)
-        agg = (
-            df.groupBy(*groups, "_ml_grp")
-            .agg(
-                F.min(order_col).alias(order_col),
-                # keep the TS COLUMN THE STAGE READS (r5 review: a custom
-                # ts_col was silently replaced by a NULL literal 'ts')
-                F.min(ts_col).alias(ts_col)
-                if ts_col in df.columns
-                else F.lit(None).alias(ts_col),
-                _ordered_join(order_col, text_col, sep),
-                F.count(F.lit(1)).alias("n_lines"),
-                flags_agg,
-            )
-            .drop("_ml_grp")
+            boundary = boundary | _gap_boundary(groups, order_col, ts_col, timeout_seconds)
+        return _message_buffer(
+            df, _event_ids(boundary, groups, order_col), groups, order_col, text_col, sep,
+            max_lines, max_content_bytes, ts_col=ts_col,
         )
-        return _finalize_buffer(agg, text_col, max_content_bytes)
 
     return stage
-
-
-def _cap_and_flags(df: DataFrame, groups, order_col: str, max_lines: int):
-    """max_lines semantics shared by the pattern and while modes
-    (multiline/pattern.go + while.go both read the buffer config): an
-    oversized group keeps its FIRST max_lines lines, DROPS the rest, and
-    the emitted event carries the truncated flag — no sub-split into
-    extra logical events. The size window shares the group-key
-    partitioning, so no extra shuffle. Returns (capped df, agg-side
-    flags expression = union of member flags + truncation, ADVICE r3)."""
-    wg = Window.partitionBy(*groups, "_ml_grp").orderBy(order_col)
-    wsz = Window.partitionBy(*groups, "_ml_grp")
-    df = (
-        df.withColumn("_ml_rn", F.row_number().over(wg))
-        .withColumn("_ml_sz", F.count(F.lit(1)).over(wsz))
-        .filter(F.col("_ml_rn") <= max_lines)
-    )
-    trunc = F.when(
-        F.max("_ml_sz") > max_lines, F.array(F.lit(FLAG_TRUNCATED))
-    ).otherwise(F.array().cast("array<string>"))
-    if FLAGS_COL in df.columns:
-        flags_agg = F.array_distinct(
-            F.concat(
-                F.flatten(
-                    F.collect_list(F.coalesce(F.col(FLAGS_COL), F.array().cast("array<string>")))
-                ),
-                trunc,
-            )
-        ).alias(FLAGS_COL)
-    else:
-        flags_agg = trunc.alias(FLAGS_COL)
-    return df, flags_agg
-
-
-def _finalize_buffer(agg: DataFrame, text_col: str, max_content_bytes: int | None) -> DataFrame:
-    """message_buffer.go:126-134 finalize(): a joined event carries the
-    `multiline` flag when more than one source line contributed, and
-    `max_content_bytes` caps the JOINED content (separators included in
-    the byte budget, like addLine's space accounting) with the
-    `truncated` flag — reusing truncate_fields' UTF-8-safe byte cut."""
-    ml = F.when(F.col("n_lines") > 1, F.array(F.lit(FLAG_MULTILINE))).otherwise(
-        F.array().cast("array<string>")
-    )
-    agg = agg.withColumn(FLAGS_COL, F.concat(F.col(FLAGS_COL), ml))
-    if max_content_bytes is not None:
-        from .actions import truncate_fields
-
-        agg = truncate_fields([text_col], max_bytes=max_content_bytes)(agg)
-    # dedup LAST: truncate_fields may append a 'truncated' the member
-    # lines already carried (r5 review — dedup-then-append doubled it)
-    return agg.withColumn(FLAGS_COL, F.array_distinct(F.col(FLAGS_COL)))
 
 
 def multiline_count(
@@ -227,38 +240,55 @@ def multiline_count(
     sep: str = "\n",
     max_content_bytes: int | None = None,
 ):
-    """multiline/counter.go — join every N lines; the shared message
-    buffer's finalize flags/byte cap apply here too (message_buffer.go
-    backs every multiline mode). A positive `max_lines` overrides the
+    """multiline/counter.go — join every N lines through the shared
+    message buffer. A positive `max_lines` below `count` overrides the
     buffer cap (counter.go:41-43): the reader still consumes `count`
     lines per event, but only the first max_lines are kept and the
-    event carries the truncated flag."""
+    event carries the truncated flag; otherwise nothing can be capped
+    and the fold skips the cap windows."""
     groups = group_cols or ["conv_id"]
+    cap = max_lines if max_lines is not None and 0 < max_lines < count else None
 
     def stage(df: DataFrame) -> DataFrame:
         w = Window.partitionBy(*groups).orderBy(order_col)
-        df = df.withColumn("_ml_grp", ((F.row_number().over(w) - 1) / count).cast("int"))
-        if max_lines is not None and 0 < max_lines < count:
-            df, flags_agg = _cap_and_flags(df, groups, order_col, max_lines)
-        elif FLAGS_COL in df.columns:
-            flags_agg = F.array_distinct(
-                F.flatten(
-                    F.collect_list(F.coalesce(F.col(FLAGS_COL), F.array().cast("array<string>")))
-                )
-            ).alias(FLAGS_COL)
-        else:
-            flags_agg = F.array().cast("array<string>").alias(FLAGS_COL)
-        agg = (
-            df.groupBy(*groups, "_ml_grp")
-            .agg(
-                F.min(order_col).alias(order_col),
-                _ordered_join(order_col, text_col, sep),
-                F.count(F.lit(1)).alias("n_lines"),
-                flags_agg,
-            )
-            .drop("_ml_grp")
+        event_id = ((F.row_number().over(w) - 1) / count).cast("int")
+        return _message_buffer(df, event_id, groups, order_col, text_col, sep, cap, max_content_bytes)
+
+    return stage
+
+
+def multiline_while(
+    pattern: str,
+    negate: bool = False,
+    group_cols: list[str] | None = None,
+    order_col: str = "turn_idx",
+    text_col: str = "text",
+    max_lines: int = 500,
+    sep: str = "\n",
+    timeout_seconds: float | None = None,
+    ts_col: str = "ts",
+    max_content_bytes: int | None = None,
+):
+    """multiline/while.go — join CONSECUTIVE lines while pattern matches;
+    a non-matching line is its own single-line event. max_lines
+    (while.go:57-59) and the timeout (while.go:63-69, the same gap split
+    as pattern mode) apply, and the shared message buffer does the rest:
+    an oversized run keeps its FIRST max_lines lines + truncated flag."""
+    groups = group_cols or ["conv_id"]
+
+    def stage(df: DataFrame) -> DataFrame:
+        matches = F.col(text_col).rlike(pattern)
+        in_run = ~matches if negate else matches
+        w0 = Window.partitionBy(*groups).orderBy(order_col)
+        prev_in_run = F.lag(in_run, 1, False).over(w0)
+        # boundary: not in a run, or run just started
+        boundary = (~in_run) | (in_run & ~F.coalesce(prev_in_run, F.lit(False)))
+        if timeout_seconds is not None:
+            boundary = boundary | _gap_boundary(groups, order_col, ts_col, timeout_seconds)
+        return _message_buffer(
+            df, _event_ids(boundary, groups, order_col), groups, order_col, text_col, sep,
+            max_lines, max_content_bytes,
         )
-        return _finalize_buffer(agg, text_col, max_content_bytes)
 
     return stage
 

@@ -254,7 +254,7 @@ class Selector:
                 kv = []
                 for k, v in folded.items():
                     kv.extend([F.lit(k), F.lit(v)])
-                mapped = F.create_map(*kv).getItem(value)
+                mapped = F.create_map(*kv)[value]
                 # empty KEY short-circuits to default before the lookup
                 # (mapSelector.sel: n == "" → otherwise)
                 mapped = F.when(value.isNull() | (value == F.lit("")), default_lit).otherwise(mapped)

@@ -1,15 +1,19 @@
-"""The r6 locate/substr dissect fast path must be indistinguishable from
-the lazy-regex plan it replaced.
+"""The locate/substr dissect plan (the only Column path) must agree with
+the anchored regex `regex_pattern` lowers the same tokenizer to, and
+both with the scalar reference walk.
 
 Why equality holds (and what this test pins): the sequential-find walk
 takes the FIRST occurrence of each delimiter; any regex assignment's
 occurrence q_j is >= the sequential p_j by induction, so sequential
 success implies the regex matches with exactly the sequential captures,
-and sequential failure implies no regex assignment exists either. The
-fallback regex branch in dissect_columns is therefore belt-and-braces;
-this test hammers the combined plan against a plain Python `re`
-evaluation of the SAME pattern over adversarial strings (repeated
-delimiters, delimiters inside captures, embedded newlines, empties).
+and sequential failure implies no regex assignment exists either. A
+greedy `%{k->}` keeps this only because its padding is possessive in
+the regex: a backtracking `(?:c)*` could hand a padding character to a
+later delimiter search and match where the walk fails ('x  y' against
+'%{a->} %{b} %{c}'). The test hammers the Column plan against a plain
+Python `re` evaluation of the pattern and against `Dissector.dissect`
+over adversarial strings (repeated delimiters, padding runs, delimiters
+inside captures, embedded newlines, empties).
 """
 
 from __future__ import annotations
@@ -19,18 +23,22 @@ import re
 
 import pytest
 
-from beats_spark.dissect import Dissector, dissect_columns
+from beats_spark.dissect import DissectError, Dissector, dissect_columns
 
 TOKENIZERS = [
     'level=%{level} ts=%{ts_str} tool=%{tool_tok} msg="%{msg}"',
     "ran step %{step}",
     "%{a} - %{b}:%{c}",
     "[%{ts}] %{rest}",
+    "%{a->} %{b}",
+    "[%{ts->}]%{rest}",
+    "%{a->} %{b} %{c}",
 ]
 
 PIECES = [
     "level=", " ts=", " tool=", ' msg="', '"', " - ", ":", "[", "]", " ",
     "x", "yy", "ts=", "msg=", "level", "\n", "", "step", "ran step ",
+    "   ", "]]]",
 ]
 
 
@@ -49,6 +57,9 @@ def _random_strings(n: int, seed: int) -> list[str]:
         'level=a ts=b tool=c msg="unterminated',  # missing closing quote
         "",
         'level=a\nts=b ts=c tool=d msg="e\nf"',
+        "x  y",      # padding run, then a field with no delimiter left
+        "a   b  c",
+        "[t]]] r",
     ]
     return out
 
@@ -85,4 +96,9 @@ def test_locate_plan_equals_regex_reference(spark, tok):
             if (m is not None and len(s) > 0)
             else tuple(None for _ in keys)
         )
+        try:
+            walk = tuple(d.dissect(s)[k] for k in keys)
+        except DissectError:
+            walk = tuple(None for _ in keys)
+        assert want == walk, f"{tok!r} on {s!r}: regex {want} != walk {walk}"
         assert got[i] == want, f"{tok!r} on {s!r}: {got[i]} != {want}"

@@ -16,7 +16,7 @@ Engine mapping (documented divergences):
     reference's ignore_failure observable), asserted below.
 
 Every case runs on BOTH execution paths: the pure-Column fast path and
-the Arrow UDF path (forced by disabling column_plan).
+the Arrow UDF path (forced by disabling locate_plan).
 """
 
 from __future__ import annotations
@@ -96,7 +96,7 @@ def _run(spark, tokenizer, kwargs, message, force_udf, monkeypatch, extra_cols=N
         [tuple(cols.values())], ", ".join(f"`{c}` string" for c in cols)
     )
     if force_udf:
-        monkeypatch.setattr(Dissector, "column_plan", lambda self, col: None)
+        monkeypatch.setattr(Dissector, "locate_plan", lambda self, col: None)
     return dissect_columns(df, tokenizer, **kwargs)
 
 
@@ -159,7 +159,7 @@ def test_field_already_exist_refuses(spark, prefix, existing):
 def test_overwrite_keys_true_overwrites(spark, monkeypatch, force_udf):
     df = spark.createDataFrame([("hello world", 42)], "text string, key int")
     if force_udf:
-        monkeypatch.setattr(Dissector, "column_plan", lambda self, col: None)
+        monkeypatch.setattr(Dissector, "locate_plan", lambda self, col: None)
     out = dissect_columns(df, "hello %{key}", overwrite_keys=True).first()
     assert out.key == "world"
     assert out.text == "hello world"
@@ -175,7 +175,7 @@ def test_error_flagging(spark, monkeypatch, force_udf):
         [("hello world",), ("something completely different",)], "text string"
     )
     if force_udf:
-        monkeypatch.setattr(Dissector, "column_plan", lambda self, col: None)
+        monkeypatch.setattr(Dissector, "locate_plan", lambda self, col: None)
     rows = {r.text: r for r in dissect_columns(df, "hello %{key}").collect()}
     good = rows["hello world"]
     bad = rows["something completely different"]
@@ -188,7 +188,7 @@ def test_processor_convert_typed_capture(spark, monkeypatch, force_udf):
     """TestProcessorConvert: %{user_id|integer} lands as int32."""
     df = spark.createDataFrame([("userid=7736",)], "text string")
     if force_udf:
-        monkeypatch.setattr(Dissector, "column_plan", lambda self, col: None)
+        monkeypatch.setattr(Dissector, "locate_plan", lambda self, col: None)
     out = dissect_columns(df, "userid=%{user_id|integer}", prefix="dissect_")
     assert dict(out.dtypes)["dissect_user_id"] == "int"
     assert out.first().dissect_user_id == 7736

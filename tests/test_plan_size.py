@@ -207,6 +207,45 @@ class TestParserChainPlanShape:
         assert s.count("Exchange") == 1, s
         assert len(s) < PLAN_CHARS_MAX
 
+    def test_count_chain_single_exchange(self, spark):
+        from beats_spark.processors.parser_config import parsers_chain
+
+        df = spark.range(0, 100).select(
+            (F.col("id") % 5).cast("string").alias("conv_id"),
+            F.col("id").cast("int").alias("turn_idx"),
+            F.lit("line").alias("text"),
+        )
+        chain = parsers_chain([{"multiline": {"type": "count", "count_lines": 3}}])
+        s = _plan_str(chain(df))
+        assert s.count("Exchange") == 1, s
+        assert len(s) < PLAN_CHARS_MAX
+
+
+class TestParsePlanShape:
+    """dissect's Column path is the sequential locate/substr walk alone:
+    the flagship parse carries no regex extraction (a per-row regex
+    fallback behind the walk would put `regexp_extract` back)."""
+
+    def test_parse_enrich_plan_has_no_regexp_extract(self, spark):
+        from beats_spark.pipeline import parse_enrich
+
+        transcripts = spark.range(0, 50).select(
+            F.concat(F.lit("conv-"), (F.col("id") % 5).cast("string")).alias("conv_id"),
+            F.col("id").cast("int").alias("turn_idx"),
+            F.lit("tool").alias("role"),
+            F.concat(
+                F.lit('level=info ts=2024-01-01T00:00:00Z tool=bash msg="ran step '),
+                F.col("id").cast("string"),
+                F.lit('"'),
+            ).alias("text"),
+            F.lit("bash").alias("tool"),
+            F.timestamp_seconds(F.lit(1_700_000_000) + F.col("id")).alias("ts"),
+        )
+        df = parse_enrich(transcripts, spark)
+        s = df._jdf.queryExecution().optimizedPlan().toString()
+        assert "locate(" in s, s  # the walk is there ...
+        assert "regexp_extract" not in s, s  # ... and nothing behind it
+
 
 class TestLookupFamilyPlanShape:
     """The r5d lookup ports must keep the module's plan contract: the

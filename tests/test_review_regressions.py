@@ -703,7 +703,7 @@ def test_r5_no_double_truncated_flag(spark):
 def test_r5_multiline_while_buffer_finalize(spark):
     """r5 finding 5: while-mode joins now carry the multiline flag and
     preserve member-line flags like every other mode."""
-    from beats_spark.processors.misc import multiline_while
+    from beats_spark.processors.stateful import multiline_while
 
     df = spark.createDataFrame(
         [("c", 0, "run a", ["truncated"]), ("c", 1, "run b", []), ("c", 2, "solo", [])],
