@@ -26,10 +26,14 @@ Execution strategies (chosen at compile time on the driver):
      `ltrim`): pure JVM, whole-stage codegen, no regex and zero Python
      on the hot path.  `regex_pattern` is the eligibility test and the
      equivalent anchored regex the tests compare against.
-  2. **Arrow UDF path** — full grammar, implemented with *vectorized*
-     pandas string ops over Arrow batches (first-occurrence splits via
-     ``Series.str.split(n=1)``); no per-row Python except final dict
-     assembly for dynamic-key (indirect) outputs.
+  2. **Arrow UDF path** — full grammar: the reference walk over Arrow
+     batches (`Dissector.pandas_dissect` maps `dissect` over each batch).
+     Arrow batching pays for the JVM↔Python boundary; inside a batch,
+     object-dtype string ops would be per-element Python anyway, so the
+     one scalar walk is also the fastest batch walk.
+
+One walk per engine: `locate_plan` for Columns, `_extract_scalar` for
+Python.
 
 Scale note: both paths are embarrassingly parallel per-partition with no
 shuffle; the fast path additionally stays inside WholeStageCodegen, so a
@@ -46,7 +50,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-from .events import ATTRS_TYPE, FLAG_DISSECT_FAILURE, FLAGS_COL, append_flag
+from .events import ATTRS_TYPE, FLAG_DISSECT_FAILURE, FLAGS_COL, append_flag, flags_column
 
 # Tokenizer grammar regexes (semantics of const.go:47-52).
 _DELIM_RE = re.compile(r"(.*?)%\{([^}]*?)\}", re.S)
@@ -185,7 +189,8 @@ class Dissector:
     # -- scalar reference implementation (driver-side & tests) --------------
 
     def _extract_scalar(self, s: str) -> list[tuple[int, int]]:
-        if len(s) == 0:
+        n = len(s)
+        if n == 0:
             raise DissectError("empty string provided")
         n_fields = len(self.fields)
         positions = [(0, 0)] * n_fields
@@ -202,7 +207,7 @@ class Dissector:
             nxt = delims[i + 1]
             if fld.fixed:
                 end = offset + fld.length
-                if end > len(s):
+                if end > n:
                     raise DissectError("field length is greater than string length")
             else:
                 if nxt == "":
@@ -225,10 +230,10 @@ class Dissector:
         i = len(delims) - 1
         if i < n_fields:
             fld = self.fields[i]
-            if fld.fixed and offset + fld.length != len(s):
+            if fld.fixed and offset + fld.length != n:
                 raise DissectError("last fixed length key does not fit")
-            if offset < len(s):
-                positions[i] = (offset, len(s))
+            if offset < n:
+                positions[i] = (offset, n)
         return positions
 
     def _trim(self, v: str) -> str:
@@ -240,7 +245,8 @@ class Dissector:
             return v.strip(self.trim_chars)
         return v
 
-    def _resolve(self, values: dict[int, str], typed: bool) -> dict:
+    def _resolve(self, values: list[str], typed: bool) -> dict:
+        """Captured values (indexed by field id) → output map."""
         m: dict[str, str] = {}
         for f in self.sorted_fields:
             v = values[f.id]
@@ -270,123 +276,28 @@ class Dissector:
         return m
 
     def dissect(self, s: str) -> dict[str, str]:
-        positions = self._extract_scalar(s)
-        values = {f.id: self._trim(s[p[0] : p[1]]) for f, p in zip(self.fields, positions)}
+        values = [s[a:b] for a, b in self._extract_scalar(s)]
+        if self.trim_values:
+            values = [self._trim(v) for v in values]
         return self._resolve(values, typed=False)
 
     def dissect_convert(self, s: str) -> dict[str, object]:
         # DissectConvert skips the trimmer (dissect.go:79-94).
-        positions = self._extract_scalar(s)
-        values = {f.id: s[p[0] : p[1]] for f, p in zip(self.fields, positions)}
+        values = [s[a:b] for a, b in self._extract_scalar(s)]
         return self._resolve(values, typed=True)
 
-    # -- vectorized (Arrow batch) implementation ----------------------------
-
-    def _needs_scalar_fallback(self) -> bool:
-        """Multichar greedy padding uses overlapping-occurrence stepping that
-        has no cheap vectorized equivalent — fall back to the scalar walk."""
-        for i in range(len(self.delimiters) - 1):
-            nxt = self.delimiters[i + 1]
-            if self.fields[i].greedy and len(nxt) > 1:
-                return True
-        return False
-
-    def pandas_extract(self, s: pd.Series) -> tuple[dict[int, pd.Series], pd.Series]:
-        """Vectorized extract over a batch. Returns ({field_id: values}, fail)."""
-        if self._needs_scalar_fallback():
-            return self._pandas_extract_scalar(s)
-        n = len(s)
-        idx = s.index
-        fail = s.isna() | (s.str.len().fillna(0) == 0)
-        rest = s.fillna("").astype(str)
-        vals: dict[int, pd.Series] = {}
-        delims = self.delimiters
-
-        d0 = delims[0]
-        if d0:
-            fail = fail | ~rest.str.startswith(d0)
-            rest = rest.str.slice(len(d0))
-
-        for i in range(len(delims) - 1):
-            fld = self.fields[i]
-            nxt = delims[i + 1]
-            if fld.fixed:
-                fail = fail | (rest.str.len() < fld.length)
-                vals[i] = rest.str.slice(0, fld.length)
-                after = rest.str.slice(fld.length)
-                # Blind skip of the following delimiter (extract() does not
-                # verify it after a fixed-length capture, dissect.go:147,163).
-                if fld.greedy and nxt:
-                    # greedy walk: one blind char, then strip the run of the
-                    # following delimiter starting at end+1 (dissect.go:151-160)
-                    rest = after.str.slice(1).str.lstrip(nxt)
-                else:
-                    rest = after.str.slice(len(nxt))
-            elif nxt == "":
-                vals[i] = pd.Series([""] * n, index=idx)
-            else:
-                parts = rest.str.split(re.escape(nxt), n=1, expand=True, regex=True)
-                if parts.shape[1] == 1:
-                    parts[1] = None
-                found = parts[1].notna()
-                fail = fail | ~found
-                vals[i] = parts[0].where(found, "")
-                after = parts[1].fillna("")
-                if fld.greedy:
-                    # single-char padding: strip the leading run.
-                    after = after.str.lstrip(nxt)
-                rest = after
-
-        i = len(delims) - 1
-        if i < len(self.fields):
-            fld = self.fields[i]
-            if fld.fixed:
-                fail = fail | (rest.str.len() != fld.length)
-            vals[i] = rest
-        return vals, fail
-
-    def _pandas_extract_scalar(self, s: pd.Series) -> tuple[dict[int, pd.Series], pd.Series]:
-        rows: list[list[str]] = []
-        fails: list[bool] = []
-        nf = len(self.fields)
-        for v in s:
-            if v is None or not isinstance(v, str) or v == "":
-                rows.append([""] * nf)
-                fails.append(True)
-                continue
-            try:
-                pos = self._extract_scalar(v)
-                rows.append([v[a:b] for a, b in pos])
-                fails.append(False)
-            except DissectError:
-                rows.append([""] * nf)
-                fails.append(True)
-        df = pd.DataFrame(rows, index=s.index)
-        return {i: df[i] for i in range(nf)}, pd.Series(fails, index=s.index)
+    # -- Arrow batch path -----------------------------------------------------
 
     def pandas_dissect(self, s: pd.Series) -> pd.Series:
-        """Batch → Series of dict[str,str] (None where parse failed)."""
-        vals, fail = self.pandas_extract(s)
-        if self.trim_values:
-            vals = {i: self._vtrim(v) for i, v in vals.items()}
-        cols = [vals[f.id] for f in self.fields]
+        """Batch → Series of dict[str,str]: the reference walk per value
+        (None for a non-string, empty or failing value)."""
         out = []
-        fl = fail.tolist()
-        for j, row in enumerate(zip(*[c.tolist() for c in cols])):
-            if fl[j]:
+        for v in s:
+            try:
+                out.append(self.dissect(v) if isinstance(v, str) else None)
+            except DissectError:
                 out.append(None)
-            else:
-                out.append(self._resolve({f.id: row[k] for k, f in enumerate(self.fields)}, typed=False))
         return pd.Series(out, index=s.index, dtype=object)
-
-    def _vtrim(self, v: pd.Series) -> pd.Series:
-        if self.trim_values == "left":
-            return v.str.lstrip(self.trim_chars)
-        if self.trim_values == "right":
-            return v.str.rstrip(self.trim_chars)
-        if self.trim_values == "all":
-            return v.str.strip(self.trim_chars)
-        return v
 
     # -- Column fast path ----------------------------------------------------
 
@@ -751,6 +662,7 @@ def dissect_columns(
 
     col = F.col(src)
     plan = d.locate_plan(col)
+    tmp = None
     if plan is not None:
         matched, cols = plan
         # errEmpty parity: an empty input string is a parse failure
@@ -776,17 +688,10 @@ def dissect_columns(
         for k in out_keys:
             df = df.withColumn(prefix + k, _typed(k, F.col(tmp)[k]))
         fail_cond = F.col(tmp).isNull() | F.col(f"{tmp}.{out_keys[0]}").isNull()
-        # flag BEFORE dropping the temp struct — fail_cond references it
-        if flag_failures:
-            flags = (
-                F.col(FLAGS_COL) if FLAGS_COL in df.columns else F.lit(None).cast("array<string>")
-            )
-            df = df.withColumn(FLAGS_COL, append_flag(flags, FLAG_DISSECT_FAILURE, fail_cond))
-        return df.drop(tmp)
+    # flag BEFORE dropping the temp struct — the UDF's fail_cond references it
     if flag_failures:
-        flags = F.col(FLAGS_COL) if FLAGS_COL in df.columns else F.lit(None).cast("array<string>")
-        df = df.withColumn(FLAGS_COL, append_flag(flags, FLAG_DISSECT_FAILURE, fail_cond))
-    return df
+        df = df.withColumn(FLAGS_COL, append_flag(flags_column(df), FLAG_DISSECT_FAILURE, fail_cond))
+    return df if tmp is None else df.drop(tmp)
 
 
 def dissect_attrs(
@@ -818,6 +723,5 @@ def dissect_attrs(
         merged = new_map
     df = df.withColumn(target, merged)
     if flag_failures:
-        flags = F.col(FLAGS_COL) if FLAGS_COL in df.columns else F.lit(None).cast("array<string>")
-        df = df.withColumn(FLAGS_COL, append_flag(flags, FLAG_DISSECT_FAILURE, new_map.isNull()))
+        df = df.withColumn(FLAGS_COL, append_flag(flags_column(df), FLAG_DISSECT_FAILURE, new_map.isNull()))
     return df

@@ -60,7 +60,7 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .events import FLAGS_COL, FLAGS_TYPE, append_flag
+from .events import FLAGS_COL, append_flag, flags_column
 
 FLAG_GROK_FAILURE = "_grokparsefailure"  # the public Logstash tag
 
@@ -435,8 +435,7 @@ def grok_columns(
         for m in matches[1:]:
             any_match = any_match | m
         fail = ~F.coalesce(any_match, F.lit(False))
-        flags = F.col(FLAGS_COL) if FLAGS_COL in df.columns else F.lit(None).cast(FLAGS_TYPE)
-        df = df.withColumn(FLAGS_COL, append_flag(flags, FLAG_GROK_FAILURE, fail))
+        df = df.withColumn(FLAGS_COL, append_flag(flags_column(df), FLAG_GROK_FAILURE, fail))
     return df
 
 

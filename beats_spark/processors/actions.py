@@ -17,7 +17,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..conditions import compile_condition
-from ..events import ATTRS_COL, ATTRS_TYPE, FLAG_TRUNCATED, FLAGS_COL, append_flag
+from ..events import ATTRS_COL, ATTRS_TYPE, FLAG_TRUNCATED, FLAGS_COL, append_flag, flags_column
 
 
 def _with_guarded(df: DataFrame, name: str, new_col: Column, when: dict | None) -> DataFrame:
@@ -531,8 +531,7 @@ def truncate_fields(
             flag_cond = flag_cond & F.coalesce(
                 compile_condition(when, schema=dict(df.dtypes)), F.lit(False)
             )
-        flags = F.col(FLAGS_COL) if FLAGS_COL in df.columns else F.lit(None).cast("array<string>")
-        df = df.withColumn(FLAGS_COL, append_flag(flags, FLAG_TRUNCATED, flag_cond))
+        df = df.withColumn(FLAGS_COL, append_flag(flags_column(df), FLAG_TRUNCATED, flag_cond))
         for f in fields:
             df = _with_guarded(df, f, cut(F.col(f)), when)
         return df

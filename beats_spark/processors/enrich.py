@@ -293,16 +293,22 @@ def registered_domain(
                 )
             )
             df = df.join(lk, on=f"_sfx{k}", how="left")
-        depth = F.lit(1)
-        for k in range(1, _PSL_MAX_LABELS + 1):
-            depth = F.when(F.coalesce(F.col(f"_x{k}"), F.lit(False)), F.greatest(depth, F.lit(k))).otherwise(depth)
-            # a wildcard rule `*.X` (key X, k labels) has k+1 labels and
-            # only matches hosts with at least k+1 of them (PSL algorithm:
-            # "domain contains as many or more labels than the rule")
-            depth = F.when(
-                F.coalesce(F.col(f"_w{k}"), F.lit(False)) & (n >= k + 1),
-                F.greatest(depth, F.lit(k + 1)),
-            ).otherwise(depth)
+        # longest matching rule; `greatest` skips the NULLs of rules that
+        # do not match, and the implicit `*` rule gives depth 1. A
+        # wildcard rule `*.X` (key X, k labels) has k+1 labels and only
+        # matches hosts with at least k+1 of them (PSL algorithm: "domain
+        # contains as many or more labels than the rule").
+        depth = F.greatest(
+            F.lit(1),
+            *[
+                F.when(F.col(f"_x{k}"), F.lit(k))
+                for k in range(1, _PSL_MAX_LABELS + 1)
+            ],
+            *[
+                F.when(F.col(f"_w{k}") & (n >= k + 1), F.lit(k + 1))
+                for k in range(1, _PSL_MAX_LABELS + 1)
+            ],
+        )
         exc = F.coalesce(
             *[
                 F.when(F.coalesce(F.col(f"_e{k}"), F.lit(False)), F.lit(k - 1))
@@ -310,12 +316,13 @@ def registered_domain(
             ],
             F.lit(None).cast("int"),
         )
-        ps_depth = F.coalesce(exc, depth)
+        df = df.withColumn("_psl_depth", F.coalesce(exc, depth))
+        ps_depth = F.col("_psl_depth")
         rd = F.when(
             (n > ps_depth) & host.rlike(r"^[^.]+(\.[^.]+)*$"),
             F.array_join(F.slice(F.col("_psl_parts"), n - ps_depth, ps_depth + 1), "."),
         )
-        drop = ["_psl_parts"] + [
+        drop = ["_psl_parts", "_psl_depth"] + [
             c for k in range(1, _PSL_MAX_LABELS + 1) for c in (f"_sfx{k}", f"_x{k}", f"_w{k}", f"_e{k}")
         ]
         df = df.withColumn(target, rd)
@@ -348,11 +355,11 @@ def _ip_raw_hex(col: Column) -> Column:
     return F.when(col.rlike(IPV4_RE), v4).when(hx.isNotNull(), v6)
 
 
-def _ip_cmp_hex(col: Column) -> Column:
-    """Hex form used ONLY for endpoint ordering: IPv4 as its v6-mapped
-    16-byte form so mixed v4/v6 flows sort exactly like the reference's
-    bytes.Compare over net.IP 16-byte values (flow.go:88-91)."""
-    raw = _ip_raw_hex(col)
+def _ip_cmp_hex(raw: Column) -> Column:
+    """Hex form used ONLY for endpoint ordering, from `_ip_raw_hex`'s
+    output: IPv4 as its v6-mapped 16-byte form so mixed v4/v6 flows sort
+    exactly like the reference's bytes.Compare over net.IP 16-byte
+    values (flow.go:88-91)."""
     return F.when(
         F.length(raw) == 8, F.concat(F.lit("00000000000000000000ffff"), raw)
     ).otherwise(raw)
@@ -411,7 +418,6 @@ def community_id(
     """
 
     def stage(df: DataFrame) -> DataFrame:
-        s_ip, d_ip = F.col(src_ip), F.col(dst_ip)
         p = F.col(proto).cast("int")
         s_p0, d_p0 = F.col(src_port).cast("bigint"), F.col(dst_port).cast("bigint")
         # ICMP with ABSENT type/code hashes the ZERO typecode (r5
@@ -421,21 +427,40 @@ def community_id(
         t_col = F.coalesce(F.col(icmp_type).cast("bigint") if icmp_type else s_p0, F.lit(0))
         c_col = F.coalesce(F.col(icmp_code).cast("bigint") if icmp_code else d_p0, F.lit(0))
         is_icmp = p.isin(1, 58)
-        equiv = F.when(p == 1, _icmp_equiv(t_col, _ICMP4_EQUIV)).when(
-            p == 58, _icmp_equiv(t_col, _ICMP6_EQUIV)
+        # Every intermediate read more than once is projected once: an
+        # inline Column is copied into each consumer, and the nested
+        # copies of the ip parses, the ICMP equivalence and `flip` made a
+        # ~1 MB optimized plan that took seconds to optimize per call.
+        df = df.withColumns(
+            {
+                "_cid_s": _ip_raw_hex(F.col(src_ip)),
+                "_cid_d": _ip_raw_hex(F.col(dst_ip)),
+                "_cid_eq": F.when(p == 1, _icmp_equiv(t_col, _ICMP4_EQUIV)).when(
+                    p == 58, _icmp_equiv(t_col, _ICMP6_EQUIV)
+                ),
+            }
         )
+        s_hex, d_hex, equiv = F.col("_cid_s"), F.col("_cid_d"), F.col("_cid_eq")
         one_way = is_icmp & equiv.isNull()
-        s_p = F.when(is_icmp, t_col).otherwise(s_p0)
-        d_p = F.when(is_icmp, F.coalesce(equiv, c_col)).otherwise(d_p0)
+        df = df.withColumns(
+            {
+                "_cid_sp": F.when(is_icmp, t_col).otherwise(s_p0),
+                "_cid_dp": F.when(is_icmp, F.coalesce(equiv, c_col)).otherwise(d_p0),
+            }
+        )
+        s_p, d_p = F.col("_cid_sp"), F.col("_cid_dp")
         has_ports = p.isin(*_PORT_PROTOS)
         # ordering tie-break for port-less protocols: ports compare as 0
         s_ord = F.when(has_ports, s_p).otherwise(F.lit(0))
         d_ord = F.when(has_ports, d_p).otherwise(F.lit(0))
-        s_cmp, d_cmp = _ip_cmp_hex(s_ip), _ip_cmp_hex(d_ip)
+        s_cmp, d_cmp = _ip_cmp_hex(s_hex), _ip_cmp_hex(d_hex)
         # reverse unless one-way ICMP, (src < dst), or (src == dst and sport < dport)
-        flip = ~one_way & ~((s_cmp < d_cmp) | ((s_cmp == d_cmp) & (s_ord < d_ord)))
-        a_hex = F.when(flip, _ip_raw_hex(d_ip)).otherwise(_ip_raw_hex(s_ip))
-        b_hex = F.when(flip, _ip_raw_hex(s_ip)).otherwise(_ip_raw_hex(d_ip))
+        df = df.withColumn(
+            "_cid_flip", ~one_way & ~((s_cmp < d_cmp) | ((s_cmp == d_cmp) & (s_ord < d_ord)))
+        )
+        flip = F.col("_cid_flip")
+        a_hex = F.when(flip, d_hex).otherwise(s_hex)
+        b_hex = F.when(flip, s_hex).otherwise(d_hex)
         a_p = F.when(flip, d_p).otherwise(s_p)
         b_p = F.when(flip, s_p).otherwise(d_p)
         port_hex = F.when(
@@ -460,7 +485,7 @@ def community_id(
         return df.withColumn(
             target,
             F.when(packed.isNotNull() & ports_ok, F.concat(F.lit("1:"), digest)),
-        )
+        ).drop("_cid_s", "_cid_d", "_cid_eq", "_cid_sp", "_cid_dp", "_cid_flip")
 
     return stage
 
@@ -590,7 +615,7 @@ def cache_sequential(
     collect) — hot keys cost one partition's sort, not a build side.
     """
     from ..conditions import compile_condition
-    from ..events import FLAGS_COL, append_flag
+    from ..events import FLAGS_COL, append_flag, flags_column
     from pyspark.sql import Window
 
     # True = "no when guard" (a beats cache processor without a when
@@ -651,16 +676,11 @@ def cache_sequential(
             occupied = F.lit(False)
             cur = F.lit(None).cast(schema.get(value_field, "string"))
         writable = found & (F.lit(overwrite_keys) | ~occupied)
-        flags = (
-            F.col(FLAGS_COL)
-            if FLAGS_COL in df.columns
-            else F.lit(None).cast("array<string>")
-        )
         err = (is_get & ~found & ~F.lit(ignore_failure)) | (found & ~writable)
         return df.withColumns(
             {
                 target_field: F.when(writable, entry["v"]).otherwise(cur),
-                FLAGS_COL: append_flag(flags, "cache_get_error", err),
+                FLAGS_COL: append_flag(flags_column(df), "cache_get_error", err),
             }
         )
 

@@ -427,7 +427,7 @@ def decode_xml(
         return pd.DataFrame({"js": [a for a, _ in pairs], "doc_id": [b for _, b in pairs]})
 
     def stage(df: DataFrame) -> DataFrame:
-        from ..events import ATTRS_COL, ATTRS_TYPE, FLAGS_COL, append_flag
+        from ..events import ATTRS_COL, ATTRS_TYPE, FLAGS_COL, append_flag, flags_column
 
         if field not in df.columns:
             if ignore_missing:
@@ -451,12 +451,7 @@ def decode_xml(
             )
             new_cols["_meta_id"] = F.coalesce(dec.getField("doc_id"), prev)
         if not ignore_failure:
-            flags = (
-                F.col(FLAGS_COL)
-                if FLAGS_COL in df.columns
-                else F.lit(None).cast("array<string>")
-            )
-            new_cols[FLAGS_COL] = append_flag(flags, "decode_xml_error", failed)
+            new_cols[FLAGS_COL] = append_flag(flags_column(df), "decode_xml_error", failed)
         if to == "":
             parsed = F.from_json(js, ATTRS_TYPE)
             base = (

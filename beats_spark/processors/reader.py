@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..events import ATTRS_COL, ATTRS_TYPE, FLAG_TRUNCATED, FLAGS_COL, append_flag
+from ..events import ATTRS_COL, ATTRS_TYPE, FLAG_TRUNCATED, FLAGS_COL, append_flag, flags_column
 
 
 def include_lines(patterns: list[str], field: str = "text"):
@@ -44,8 +44,7 @@ def max_bytes(limit: int, field: str = "text"):
 
     def stage(df: DataFrame) -> DataFrame:
         over = F.length(F.col(field)) > limit
-        flags = F.col(FLAGS_COL) if FLAGS_COL in df.columns else F.lit(None).cast("array<string>")
-        return df.withColumn(FLAGS_COL, append_flag(flags, FLAG_TRUNCATED, over)).withColumn(
+        return df.withColumn(FLAGS_COL, append_flag(flags_column(df), FLAG_TRUNCATED, over)).withColumn(
             field, F.substring(F.col(field), 1, limit)
         )
 

@@ -312,3 +312,43 @@ class TestLookupFamilyPlanShape:
         # the probe side stays one stage: the Range scan appears under no Exchange
         range_idx = s.find("Range (0, 10000")
         assert range_idx != -1, s
+
+
+class TestEnrichPlanSize:
+    """A Column reused inline is copied into each consumer, so a stage
+    that folds a Column into itself (`x = when(c, f(x)).otherwise(x)`)
+    or reads a big intermediate from several nested places grows its
+    plan multiplicatively. Measured on one-row frames (optimized plan,
+    chars): registered_domain 300,865 with its depth fold, 4,880 with
+    one `greatest`; community_id ~1,000,000 with its intermediates
+    inline, ~16,000 with them projected once."""
+
+    def _plan(self, df):
+        return df._jdf.queryExecution().optimizedPlan().toString()
+
+    def test_registered_domain_plan_bounded(self, spark):
+        from beats_spark.processors import build
+
+        df = spark.createDataFrame([("www.google.co.uk",)], "domain string")
+        out = build(
+            "registered_domain",
+            field="domain",
+            target="registered_domain",
+            target_subdomain="subdomain",
+            target_etld="etld",
+        )(df)
+        s = self._plan(out)
+        assert len(s) < PLAN_CHARS_MAX, f"registered_domain: plan string {len(s)} chars"
+
+    def test_community_id_plan_bounded(self, spark):
+        from beats_spark.processors import build
+
+        df = spark.createDataFrame(
+            [("128.232.110.120", "66.35.250.204", 34855, 80, 6)],
+            "sip string, dip string, sp int, dp int, proto int",
+        )
+        out = build(
+            "community_id", src_ip="sip", dst_ip="dip", src_port="sp", dst_port="dp", proto="proto"
+        )(df)
+        s = self._plan(out)
+        assert len(s) < PLAN_CHARS_MAX, f"community_id: plan string {len(s)} chars"
