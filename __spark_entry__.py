@@ -1192,7 +1192,6 @@ def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     Both recomputed from scratch by the oracle. (Folded HERE, not into
     text_quality: that row is a pinned A/B + headline bench metric.)"""
     from beats_spark.datapipe.dedup import dup_span_stats, ngram_jaccard_pairs
-    from beats_spark.datapipe.dedup import _track
     from beats_spark.datapipe.packing import pack_sequences
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -1221,9 +1220,7 @@ def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_tok_end").alias("dupt"),
         F.col("seq_offset").cast("double").alias("dupf"),
     )
-    # re-track the manifest's persisted range exchange through the union
-    # so release_intermediates(result) can free it (r5 review)
-    return _track(pairs.unionByName(spans).unionByName(pack), inherit=[manifest])
+    return pairs.unionByName(spans).unionByName(pack)
 
 
 def q_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1232,7 +1229,6 @@ def q_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     multiprobe ANN ranks (plane-literal oracle), kind='neardup' rows the
     capped-bucket embedding near-dup pairs. Both share the SRP bucketing
     machinery; each keeps its full value-level oracle."""
-    from beats_spark.datapipe.dedup import _track
     from beats_spark.datapipe.similarity import embedding_near_dupes, lsh_bucket_topk
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
@@ -1252,9 +1248,7 @@ def q_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("id_b").alias("b"),
         F.lit(0).cast("bigint").alias("val"),
     )
-    # the select and the union both drop near's persisted-frame
-    # ownership; re-track it so release_intermediates(result) frees it
-    return _track(topk.unionByName(dupes), inherit=[near])
+    return topk.unionByName(dupes)
 
 
 def q_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -20,61 +20,20 @@ Scale design notes (the part that matters at 100 TB):
     rounds (Kiveris et al. 2014): O(log² N) rounds worst-case regardless
     of component diameter, one bounded driver action per round; min-label
     propagation is retained as its property-test oracle.
+  * no cached intermediates: every operator is one plan, and no result
+    depends on a persist that someone else must free. Each self-join
+    (bucket, block, key and SRP tables; jaccard_verify's pairs and
+    shingles) reads its shared subtree twice in the logical plan, and
+    Spark 4.1 plans the second read as a ReusedExchange of the first,
+    so the subtree runs once (checked per site in the executed plan).
+    Where there is no exchange to reuse (dup_span_stats), the operator
+    is one chain of windows over a single explode instead.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
-
-
-def _materialize(df: DataFrame) -> DataFrame:
-    """Compute a reused subtree once across self-join sides.
-
-    persist(MEMORY_AND_DISK), NOT localCheckpoint: both dedupe the
-    subtree (each side reads the cache), but persist keeps the lineage —
-    an executor lost after materialization recomputes its partitions
-    instead of failing the job (r4 review pass 2; localCheckpoint blocks
-    are executor-local and unrecoverable). Blocks are released by the
-    ContextCleaner when the plan is garbage-collected — or eagerly by
-    `release_intermediates(result)`, which every candidate generator
-    wires up (r4 ADVICE: per-batch loop callers would otherwise
-    accumulate cached blocks and evict useful cache).
-    """
-    return df.persist(StorageLevel.MEMORY_AND_DISK)
-
-
-def _track(result: DataFrame, persisted=(), inherit=()) -> DataFrame:
-    """Attach ownership of persisted intermediate frames to `result` so
-    callers can free them eagerly once the result is consumed. `inherit`
-    folds in frames owned by upstream results (composition chains like
-    candidates → verify → dedup carry the whole set to the final frame).
-    """
-    owned = list(getattr(result, "_bs_persisted", []))
-    for src in inherit:
-        owned.extend(getattr(src, "_bs_persisted", []))
-    owned.extend(persisted)
-    result._bs_persisted = owned
-    return result
-
-
-def release_intermediates(df: DataFrame) -> int:
-    """Eagerly unpersist the intermediate frames a dedup result owns.
-
-    Call AFTER the result has been fully consumed (written/collected) —
-    the persisted blocks are what keep the self-join sides from
-    recomputing, so releasing early just re-runs the subtree. Returns
-    the number of frames released. Drivers that call the candidate
-    generators in a loop (per-batch dedup) should call this once per
-    batch; otherwise blocks live until the plan objects are GC'd."""
-    owned = getattr(df, "_bs_persisted", [])
-    for p in owned:
-        p.unpersist()
-    n = len(owned)
-    if owned:
-        df._bs_persisted = []
-    return n
 
 
 def _bind1(expr: Column, body) -> Column:
@@ -265,12 +224,9 @@ def minhash_lsh_candidates(
         ).alias("bk"),
     ).select(id_col, "bk.b", "bk.h")
     buckets = _cap_buckets(buckets, ["b", "h"], id_col, max_bucket_rows)
-    # materialize the (id, band, hash) table ONCE: Spark does not reuse
-    # the exchange across the two self-join sides (verified from the
-    # post-AQE plan), so without this the whole shingle+signature subtree
-    # — the dominant cost — runs twice. The materialized table is
-    # rows×bands short tuples, spill-safe (r4 plan audit).
-    buckets = _materialize(buckets)
+    # both self-join sides read the cap window's (b, h) exchange: the
+    # second is a ReusedExchange, so the shingle+signature subtree — the
+    # dominant cost — runs once (Spark 4.1 executed plan)
     a = buckets.alias("a")
     bdf = buckets.alias("bq")
     pairs = (
@@ -279,7 +235,7 @@ def minhash_lsh_candidates(
         .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"bq.{id_col}").alias("id_b"))
         .distinct()
     )
-    return _track(pairs, persisted=[buckets])
+    return pairs
 
 
 def jaccard_verify(
@@ -294,22 +250,29 @@ def jaccard_verify(
 
     Scale shape (r4): shingles are computed ONLY for documents that
     appear in a candidate pair (candidates ≪ corpus after LSH), and
-    that reduced (id, shingles) table is materialized once — the naive
+    that reduced (id, shingles) table is computed once — the naive
     form shingled the ENTIRE corpus twice (once per join side), which
     at design scale is 2× corpus regex cost for a verification step
-    that touches a fraction of the documents."""
-    pairs_in = pairs
-    pairs = _materialize(pairs)
+    that touches a fraction of the documents. The candidate pairs and
+    the shingle table are each read twice in the plan; both second
+    reads are ReusedExchanges, so neither is computed twice."""
     ids = (
         pairs.select(F.col("id_a").alias(id_col))
         .unionAll(pairs.select(F.col("id_b").alias(id_col)))
         .distinct()
     )
+    # one exchange of the shingle table for both verify joins: the
+    # second reads it as a ReusedExchange, and AQE sees its real size,
+    # so a small table is broadcast instead of shuffling shingle arrays
+    # with every candidate pair. A rebalance, not a repartition: the
+    # rows are already hash-partitioned by id after the `ids` join, so
+    # a repartition on id is planned away and the shingles would be
+    # computed inside each verify join.
     sh = (
         df.join(ids, id_col)
         .select(F.col(id_col), shingles(F.col(text_col), n).alias("sh"))
+        .hint("rebalance", id_col)
     )
-    sh = _materialize(sh)
     # |A∪B| by inclusion-exclusion instead of materializing array_union
     # (r6 session 2): shingles() outputs are array_distinct by
     # construction, so |A∪B| = |A| + |B| − |A∩B| EXACTLY (holds for the
@@ -320,25 +283,22 @@ def jaccard_verify(
     # hash-set build per candidate pair; the verify stage is the
     # dominant cost of the direct ngram_jaccard path (measured
     # 75.7 → 53.3 s best-of-3 at the sf0.1 5k-doc shape).
-    n_int = F.size(F.array_intersect("sh_a", "sh_b"))
+    # both sides join `sh` on its own id column (no rename between the
+    # exchange and the join), so both read the same exchange
+    sa, sb = sh.alias("sa"), sh.alias("sb")
+    n_int = F.size(F.array_intersect("sa.sh", "sb.sh"))
     j = (
-        pairs.join(sh.withColumnRenamed(id_col, "id_a").withColumnRenamed("sh", "sh_a"), "id_a")
-        .join(sh.withColumnRenamed(id_col, "id_b").withColumnRenamed("sh", "sh_b"), "id_b")
-        .withColumn(
-            "jaccard",
+        pairs.join(sa, F.col("id_a") == F.col(f"sa.{id_col}"))
+        .join(sb, F.col("id_b") == F.col(f"sb.{id_col}"))
+        .select(
+            "id_a",
+            "id_b",
             F.round(
-                n_int
-                / (F.size("sh_a") + F.size("sh_b") - n_int).cast("double"),
-                6,
-            ),
+                n_int / (F.size("sa.sh") + F.size("sb.sh") - n_int).cast("double"), 6
+            ).alias("jaccard"),
         )
-        .select("id_a", "id_b", "jaccard")
     )
-    return _track(
-        j.filter(F.col("jaccard") >= threshold),
-        persisted=[pairs, sh],
-        inherit=[pairs_in],
-    )
+    return j.filter(F.col("jaccard") >= threshold)
 
 
 def minhash_dedup(
@@ -356,7 +316,7 @@ def minhash_dedup(
     cands = minhash_lsh_candidates(df, text_col, id_col, num_perm, bands, n, hash_method)
     verified = jaccard_verify(df, cands, text_col, id_col, n, threshold)
     dupes = verified.select(F.col("id_b").alias(id_col)).distinct()
-    return _track(df.join(dupes, on=id_col, how="left_anti"), inherit=[verified])
+    return df.join(dupes, on=id_col, how="left_anti")
 
 
 # -- SimHash ------------------------------------------------------------------
@@ -487,12 +447,10 @@ def simhash_near_pairs(
         ).alias("bk"),
     ).select(id_col, "simhash", F.col("bk.b").alias("_bi"), F.col("bk.h").alias("_blk"))
     blocks = _cap_buckets(blocks, ["_bi", "_blk"], id_col, max_bucket_rows)
-    # materialize ONCE: the self-join references this table on BOTH
-    # sides and Spark does not deduplicate the subtrees — without this
-    # the upstream simhash explode+aggregate would run twice over the
-    # corpus (r4 plan audit). (id, simhash, 2×int) rows are tiny and
-    # spill-safe.
-    blocks = _materialize(blocks)
+    # the self-join reads this table on BOTH sides; the second side is
+    # a ReusedExchange of the first, so the upstream simhash
+    # explode+aggregate runs once over the corpus (Spark 4.1 executed
+    # plan)
     a, b = blocks.alias("a"), blocks.alias("b")
     cands = (
         a.join(b, ["_bi", "_blk"])
@@ -503,10 +461,7 @@ def simhash_near_pairs(
             F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))).alias("hamming"),
         )
     )
-    return _track(
-        cands.filter(F.col("hamming") <= max_hamming).dropDuplicates(["id_a", "id_b"]),
-        persisted=[blocks],
-    )
+    return cands.filter(F.col("hamming") <= max_hamming).dropDuplicates(["id_a", "id_b"])
 
 
 # -- n-gram Jaccard (direct) ---------------------------------------------------
@@ -543,16 +498,15 @@ def ngram_jaccard_pairs(
         ).alias("key"),
     )
     keyed = _cap_buckets(keyed, ["key"], id_col, max_bucket_rows)
-    # materialize the (id, key) blocking table once — same
-    # two-sided-subtree recompute argument as minhash_lsh_candidates
-    keyed = _materialize(keyed)
+    # one (id, key) blocking table for both join sides — the second is
+    # a ReusedExchange, as in minhash_lsh_candidates
     a, b = keyed.alias("a"), keyed.alias("b")
     cands = (
         a.join(b, (F.col("a.key") == F.col("b.key")) & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
         .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
         .distinct()
     )
-    return jaccard_verify(df, _track(cands, persisted=[keyed]), text_col, id_col, n, threshold)
+    return jaccard_verify(df, cands, text_col, id_col, n, threshold)
 
 
 # -- transitive clustering (connected components) ------------------------------
@@ -737,16 +691,11 @@ def dedup_transitive(
     cands = minhash_lsh_candidates(df, text_col, id_col, num_perm, bands, n, hash_method)
     pairs = jaccard_verify(df, cands, text_col, id_col, n, threshold)
     cc = connected_components(pairs, id_col=id_col)
-    keep = df.join(
+    return df.join(
         cc.filter(F.col(id_col) != F.col("cluster_id")).select(id_col),
         on=id_col,
         how="left_anti",
     )
-    # inherit the persisted intermediates (buckets + pairs + shingle
-    # table) so release_intermediates(keep) frees them — without this the
-    # composed path leaked exactly the per-batch cache the _materialize
-    # ownership scheme exists to release (r5 review)
-    return _track(keep, inherit=[pairs])
 
 
 # -- benchmark decontamination -------------------------------------------------
@@ -836,17 +785,16 @@ def dup_span_stats(
     downstream: `.filter(F.col('dup_fraction') < 0.5)` or feed the dup
     spans to a cutter.
 
-    Scale shape: one explode (n_tokens - window + 1 positional hashes
-    per doc, hashes of joined-string grams — the measured-fastest
-    payload, see _word_gram_hashes), one hash-keyed count with map-side
-    partial combine, one join of the positional rows against the
-    `count >= min_count` hash set (hash-keyed shuffle; mega-duplicated
-    boilerplate hashes are exactly AQE skew-join territory — the joined
-    payload per row is only (id, pos)), then a per-doc ordered window
-    for interval-union coverage. The positional-gram table and the
-    (id, n_tokens) projection are MATERIALIZED (r5 one-off: the gram
-    transform otherwise ran three times over the corpus — release with
-    release_intermediates). No driver actions, no per-row Python.
+    Scale shape: one chain over one explode (n_tokens - window + 1
+    positional hashes per doc, hashes of joined-string grams — the
+    measured-fastest payload, see _word_gram_hashes): a count window
+    partitioned by hash marks the `count >= min_count` positions, a
+    per-doc ordered window takes the interval-union coverage, and one
+    groupBy(id) on the same partitioning sums it. The gram transform
+    runs once over the corpus and nothing is cached. Every gram row
+    (id, n_tokens, pos, hash — no text) crosses the hash exchange; only
+    the hot ones, plus one row per doc, cross the id exchange. No
+    driver actions, no per-row Python.
     """
     norm = F.trim(F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " "))
     toks = F.split(norm, " ")
@@ -873,55 +821,48 @@ def dup_span_stats(
 
     posgrams = _bind1(toks, posgrams_of)
 
-    base = df.select(F.col(id_col), nt.alias("n_tokens"), posgrams.alias("_pg"))
-    # materialize BOTH reused projections (r5 one-off finding: without
-    # these the positional-gram transform — an xxhash of a 50-token
-    # joined string per position — ran THREE times over the corpus:
-    # once for the hot count, once for the join side, once for the
-    # n_tokens frame). `counts` is 2 longs/row; `exploded` is
-    # (id, pos, hash) — neither carries text.
-    counts = _materialize(base.select(id_col, "n_tokens"))
-    exploded = _materialize(
-        base.select(id_col, F.explode("_pg").alias("g")).select(
-            id_col, F.col("g.pos").alias("_pos"), F.col("g.h").alias("_h")
-        )
+    # one row per positional gram, plus one NULL-gram row for a doc
+    # shorter than the window so every doc reaches the final groupBy;
+    # n_tokens is projected before the explode so that its normalize
+    # runs once per doc, not once per gram
+    rows = (
+        df.select(F.col(id_col), nt.alias("n_tokens"), posgrams.alias("_pg"))
+        .select(id_col, "n_tokens", F.explode_outer("_pg").alias("g"))
+        .select(id_col, "n_tokens", F.col("g.pos").alias("_pos"), F.col("g.h").alias("_h"))
     )
-    hot = (
-        exploded.groupBy("_h")
-        .agg(F.count(F.lit(1)).alias("_c"))
-        .where(F.col("_c") >= min_count)
-        .select("_h")
+    # corpus-wide count per hash in place of a groupBy + join back; the
+    # NULL-gram rows are spread over their ids so that short docs do not
+    # all land in one partition
+    w_h = Window.partitionBy("_h", F.when(F.col("_h").isNull(), F.col(id_col)))
+    hot = F.col("_h").isNotNull() & (F.count(F.lit(1)).over(w_h) >= min_count)
+    # only the hot spans cross the per-doc exchange, plus each doc's
+    # first row (position 0, or its NULL-gram row) so that every doc
+    # still reaches the groupBy
+    rows = rows.withColumn("_end", F.when(hot, F.col("_pos") + window)).where(
+        F.col("_end").isNotNull() | (F.coalesce(F.col("_pos"), F.lit(0)) == 0)
     )
-    dup_pos = exploded.join(hot, "_h").select(id_col, "_pos")
 
+    # interval-union coverage over the hot spans in position order; a
+    # row that is not hot has a NULL _end and contributes nothing
     w_ord = Window.partitionBy(id_col).orderBy("_pos")
-    prev_end = F.max(F.col("_pos") + window).over(
-        w_ord.rowsBetween(Window.unboundedPreceding, -1)
-    )
+    prev_end = F.max("_end").over(w_ord.rowsBetween(Window.unboundedPreceding, -1))
     contrib = F.greatest(
         F.lit(0).cast("long"),
-        (F.col("_pos") + window)
-        - F.greatest(F.col("_pos"), F.coalesce(prev_end, F.lit(0).cast("long"))),
+        F.col("_end") - F.greatest(F.col("_pos"), F.coalesce(prev_end, F.lit(0).cast("long"))),
     )
-    covered = (
-        dup_pos.withColumn("_cv", contrib)
+    # the groupBy shares the window's id partitioning: no further exchange
+    per_doc = (
+        rows.withColumn("_cv", contrib)
         .groupBy(id_col)
-        .agg(F.sum("_cv").alias("dup_tokens"))
+        .agg(F.max("n_tokens").alias("n_tokens"), F.sum("_cv").alias("dup_tokens"))
     )
-    out = (
-        counts
-        .join(covered, [id_col], "left")
-        .select(
-            F.col(id_col),
-            F.col("n_tokens").cast("long").alias("n_tokens"),
-            F.coalesce(F.col("dup_tokens"), F.lit(0)).cast("long").alias("dup_tokens"),
-            F.when(
-                F.col("n_tokens") > 0,
-                F.coalesce(F.col("dup_tokens"), F.lit(0)) / F.col("n_tokens"),
-            )
-            .otherwise(F.lit(0.0))
-            .cast("double")
-            .alias("dup_fraction"),
-        )
+    dup = F.coalesce(F.col("dup_tokens"), F.lit(0))
+    return per_doc.select(
+        F.col(id_col),
+        F.col("n_tokens").cast("long").alias("n_tokens"),
+        dup.cast("long").alias("dup_tokens"),
+        F.when(F.col("n_tokens") > 0, dup / F.col("n_tokens"))
+        .otherwise(F.lit(0.0))
+        .cast("double")
+        .alias("dup_fraction"),
     )
-    return _track(out, persisted=[counts, exploded])

@@ -26,13 +26,15 @@ not a single-task window:
      order-preserving, balanced bucket id computed map-side — no
      repartitionByRange (whose RangePartitioner costs a sampling pass
      and draws nondeterministic boundaries that would force a persist);
-  2. per-bucket token totals reach the driver (P rows — bounded), a
-     Python scan turns them into per-bucket BASE offsets; the post-scan
-     (id, count, hash, bucket) projection is persisted so this action
-     and the final frame tokenize the corpus ONCE, not twice;
-  3. the bases broadcast-join back and an intra-bucket running-sum
-     window (partitionBy the bucket id — its hash exchange is the only
-     row-weight shuffle in the plan) adds the local offset.
+  2. one window partitioned by the bucket id (its hash exchange is the
+     only row-weight shuffle in the plan) gives each document its
+     intra-bucket running sum and its bucket's token total;
+  3. the P bucket totals aggregate from that window's output and
+     prefix-sum in a P-row global window into per-bucket BASE offsets,
+     which broadcast-join back on the bucket id. Both consumers of the
+     window read one exchange (the second is a ReusedExchange), so the
+     corpus is tokenized once, nothing is cached and building the plan
+     runs no Spark job.
 
 A bare `Window.orderBy(...)` with no partitionBy computes the same
 result on ONE task — correct at test scale, a straggler that serializes
@@ -44,7 +46,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from .sampling import _HASH_MOD, _hash_int
 
@@ -74,56 +75,43 @@ def packing_offsets(
             F.col("_nt").alias("n_tokens"),
             (F.sum("_nt").over(w) - F.col("_nt")).alias("tok_start"),
         )
-    spark = df.sparkSession
-    p = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
+    p = num_partitions or int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     # Bucket by FIXED-WIDTH ranges of the 48-bit order hash instead of
     # repartitionByRange (r5 one-off finding): the RangePartitioner
     # costs a whole sampling pass over the input, and its sampled
-    # boundaries are nondeterministic, so correctness itself depended on
-    # a persist. _k is uniform by construction, so _pid =
-    # _k div ceil(2^48 / p) is an order-preserving, balanced bucket id
-    # computed MAP-SIDE: no sampling job, deterministic placement, and
-    # the only exchanges left are the totals' map-side partial agg and
-    # the window's own hash exchange on _pid.
+    # boundaries are nondeterministic. _k is uniform by construction, so
+    # _pid = _k div ceil(2^48 / p) is an order-preserving, balanced
+    # bucket id computed MAP-SIDE: no sampling job, deterministic
+    # placement, and the only row-weight exchange is the window's own
+    # hash exchange on _pid.
     width = (_HASH_MOD + p - 1) // p
     base = base.withColumn("_pid", F.expr(f"_k div {width}").cast("int"))
-    # persist the POST-SCAN projection (id, count, hash, bucket — no
-    # text): the totals action and the final frame are two actions, and
-    # without this each one re-reads and re-tokenizes the full corpus —
-    # at 100 TB that is the difference between scanning the text once
-    # and twice. Unlike the old sampled-range persist this is purely a
-    # performance cache (every column is a pure function of the row);
-    # ownership rides on the result via _track.
-    base = base.persist(StorageLevel.MEMORY_AND_DISK)
-    totals = {
-        r["_pid"]: r["s"]
-        for r in base.groupBy("_pid").agg(F.sum("_nt").alias("s")).collect()
-    }
-    bases, acc = [], 0
-    for pid in range(p):
-        bases.append((pid, acc))
-        acc += int(totals.get(pid, 0))
-    # VALUES LocalRelation, not createDataFrame (r6): the P-row bases
-    # table rides into a broadcast join — the Python-RDD plan pays a
-    # Python-worker round trip per run
-    from ..synth import _values_df
-
-    bdf = _values_df(spark, bases, ["_pid", "_base"]).select(
-        F.col("_pid").cast("int").alias("_pid"),
-        F.col("_base").cast("bigint").alias("_base"),
-    )
     w = Window.partitionBy("_pid").orderBy("_k", id_col)
-    out = (
-        base.join(F.broadcast(bdf), "_pid")
-        .select(
-            id_col,
-            F.col("_nt").alias("n_tokens"),
-            (F.col("_base") + F.sum("_nt").over(w) - F.col("_nt")).alias("tok_start"),
-        )
+    ran = base.select(
+        id_col,
+        "_pid",
+        "_nt",
+        (F.sum("_nt").over(w) - F.col("_nt")).alias("_local"),
+        F.sum("_nt")
+        .over(w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing))
+        .alias("_ptot"),
     )
-    from .dedup import _track
-
-    return _track(out, persisted=[base])
+    # P rows: the groupBy rides the window's _pid partitioning, then a
+    # global running sum turns the bucket totals into bucket bases.
+    # The join is a left join so that no isnotnull(_pid) filter is
+    # inferred into the probe side alone: both sides then read the same
+    # exchange and the second is a ReusedExchange.
+    wp = Window.orderBy("_pid")
+    bases = (
+        ran.groupBy("_pid")
+        .agg(F.max("_ptot").alias("_ptot"))
+        .select("_pid", (F.sum("_ptot").over(wp) - F.col("_ptot")).alias("_base"))
+    )
+    return ran.join(F.broadcast(bases), "_pid", "left").select(
+        id_col,
+        F.col("_nt").alias("n_tokens"),
+        (F.col("_base") + F.col("_local")).alias("tok_start"),
+    )
 
 
 def pack_sequences(
@@ -144,8 +132,8 @@ def pack_sequences(
 
     A document spans ceil over the budget grid: rows-out ∝ total tokens
     / budget + docs — proportional to the manifest itself, nothing
-    quadratic. The only shuffles are the totals' partial agg + the _pid
-    window of the prefix sum; the span explode is map-side."""
+    quadratic. The only row-weight shuffle is the _pid window of the
+    prefix sum; the span explode is map-side."""
     if budget <= 0:
         raise ValueError("pack_sequences: budget must be positive")
     from .text import token_count
@@ -180,16 +168,13 @@ def pack_sequences(
     seq_lo = F.col("seq_id") * budget
     span_lo = F.greatest(F.col("tok_start"), seq_lo)
     span_hi = F.least(F.col("tok_start") + F.col("n_tokens"), seq_lo + budget)
-    out = spans.select(
+    return spans.select(
         F.col("seq_id").cast("long"),
         F.col(id_col),
         (span_lo - F.col("tok_start")).cast("long").alias("doc_tok_start"),
         (span_hi - F.col("tok_start")).cast("long").alias("doc_tok_end"),
         (span_lo - seq_lo).cast("long").alias("seq_offset"),
     )
-    from .dedup import _track
-
-    return _track(out, inherit=[offs])
 
 
 def assemble_sequences(

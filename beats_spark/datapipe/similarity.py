@@ -656,16 +656,11 @@ def embedding_near_dupes(
     b = b.withColumn("_rn", F.row_number().over(wcap)).filter(
         F.col("_rn") <= max_bucket_rows
     ).drop("_rn")
-    # materialize ONCE before the self-join (r6 session 2): the two join
-    # sides are independent subtrees — verified from the executed plan
-    # (ReusedExchange 0, 2 parquet scans, 2 cap Windows) — so without
-    # this the SRP bucketing, the EXPENSIVE stage (tables × p_bits × dim
-    # multiply-adds per row), ran twice per run. Same defect class the
-    # r4 audit fixed in the minhash/simhash/ngram-blocking generators;
-    # ownership rides on the result via _track/release_intermediates.
-    from .dedup import _materialize, _track
-
-    b = _materialize(b)
+    # both self-join sides read the cap window's (t, bucket) exchange;
+    # the second is a ReusedExchange, so the SRP bucketing — the
+    # EXPENSIVE stage (tables × p_bits × dim multiply-adds per row) —
+    # runs once (Spark 4.1 executed plan: one parquet scan, one cap
+    # Window). Nothing is cached.
     a, c = b.alias("a"), b.alias("b")
     pairs = (
         a.join(
@@ -691,7 +686,7 @@ def embedding_near_dupes(
         .filter(F.col("cos_sim") >= threshold)
         .select("id_a", "id_b", "cos_sim")
     )
-    return _track(pairs, persisted=[b])
+    return pairs
 
 
 # -- product quantization ------------------------------------------------------

@@ -206,34 +206,46 @@ def parse_aws_vpc_flow_log(
                 return df
             raise TypeError(f"parse_aws_vpc_flow_log field [{field}] must be a string")
 
-        toks = F.split(F.trim(F.col(field)), r"\s+")
+        # The parse is projected ONCE into temporary columns — tokens,
+        # then each field's raw token, then its typed value and the
+        # error flag — and every output reads those by reference, so no
+        # output column carries the whole parse (the error flag ORs
+        # every field's typed check and guards every ECS column).
+        toks = F.col("_vpc_toks")
         n = F.size(toks)
-
-        # per original-field-name: typed value across formats (a field
-        # absent from the row's matched format stays NULL)
         all_names = sorted({name for p in parsed for name in p})
-        raw_by_name: dict[str, Column] = {}
-        typed_by_name: dict[str, Column] = {}
-        failed = F.lit(False)
-        matched = F.lit(False)
-        for p, cnt in zip(parsed, counts):
-            matched = matched | (n == cnt)
+        raw_cols: dict[str, Column] = {}
         for name in all_names:
-            ty = VPC_FLOW_FIELDS[name][0]
+            # a field absent from the row's matched format stays NULL
             raw: Column | None = None
             for p, cnt in zip(parsed, counts):
                 if name in p:
-                    pos = p.index(name)
-                    tok = F.get(toks, pos)
+                    tok = F.get(toks, p.index(name))
                     this = F.when((n == cnt) & (tok != "-"), tok)
                     raw = this if raw is None else F.coalesce(raw, this)
-            value = _typed(raw, ty)
-            raw_by_name[name] = raw
-            typed_by_name[name] = value
-            if ty != "string":
-                failed = failed | (raw.isNotNull() & value.isNull())
+            raw_cols[f"_vpc_r_{name}"] = raw
+        matched = F.lit(False)
+        for cnt in counts:
+            matched = matched | (n == cnt)
+        raw_cols["_vpc_ok"] = matched
 
-        err = ~matched | failed
+        typed_cols: dict[str, Column] = {}
+        failed = F.lit(False)
+        for name in all_names:
+            ty = VPC_FLOW_FIELDS[name][0]
+            raw = F.col(f"_vpc_r_{name}")
+            typed_cols[f"_vpc_t_{name}"] = _typed(raw, ty)
+            if ty != "string":
+                failed = failed | (raw.isNotNull() & F.col(f"_vpc_t_{name}").isNull())
+        temps = ["_vpc_toks", *raw_cols, *typed_cols, "_vpc_err"]
+        parsed_df = (
+            df.withColumn("_vpc_toks", F.split(F.trim(F.col(field)), r"\s+"))
+            .withColumns(raw_cols)
+            .withColumns(typed_cols)
+            .withColumn("_vpc_err", ~F.col("_vpc_ok") | failed)
+        )
+        typed_by_name = {name: F.col(f"_vpc_t_{name}") for name in all_names}
+        err = F.col("_vpc_err")
 
         # original-fields struct, per-mode membership (process():195-204)
         struct_fields = []
@@ -262,12 +274,12 @@ def parse_aws_vpc_flow_log(
                             "tcp_flags_array"
                         )
                     )
-        out = df.withColumn(
+        out = parsed_df.withColumn(
             target, F.when(~err, F.struct(*struct_fields))
         ).withColumn("vpcflow_error", err)
 
         if mode == "original":
-            return out
+            return out.drop(*temps)
 
         # ECS projection (flat typed columns, dots→underscores)
         guard = ~err
@@ -346,6 +358,6 @@ def parse_aws_vpc_flow_log(
             rel = F.array_distinct(F.array_compact(F.array(*ip_exprs)))
             ecs_cols["related_ip"] = g(F.when(F.size(rel) > 0, rel))
 
-        return out.withColumns(ecs_cols)
+        return out.withColumns(ecs_cols).drop(*temps)
 
     return stage

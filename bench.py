@@ -334,7 +334,6 @@ def sf1_run(spark, sf_dir: str, scale: int = 10) -> dict:
         # global window
         "pack_sequences": lambda: pack_sequences(docs10, budget=2048),
     }
-    from beats_spark.datapipe.dedup import release_intermediates
 
     times: dict[str, float] = {}
     for name, job in jobs.items():
@@ -342,7 +341,6 @@ def sf1_run(spark, sf_dir: str, scale: int = 10) -> dict:
         df = job()
         _force(df)
         times[name] = round(time.perf_counter() - t0, 3)
-        release_intermediates(df)  # no-op for untracked frames
     shutil.rmtree(path, ignore_errors=True)
     return times
 

@@ -4,7 +4,8 @@ Runs the reference's own fixture corpus
 (/root/reference/libbeat/processors/dissect/testdata/dissect_tests.json)
 through BOTH of our implementations:
   * the scalar reference walk (Dissector.dissect), and
-  * the vectorized Arrow-batch path (Dissector.pandas_dissect),
+  * the Arrow-batch UDF path (Dissector.pandas_dissect, which maps the
+    same reference walk over each batch),
 and cross-checks they agree case-by-case.  FIXTURES.md §2.
 """
 

@@ -321,7 +321,10 @@ class TestEnrichPlanSize:
     plan multiplicatively. Measured on one-row frames (optimized plan,
     chars): registered_domain 300,865 with its depth fold, 4,880 with
     one `greatest`; community_id ~1,000,000 with its intermediates
-    inline, ~16,000 with them projected once."""
+    inline, ~16,000 with them projected once. vpcflow (executed plan,
+    one V5 row, ecs_and_original): ~1,120,000 with every output column
+    re-inlining the typed parse and its error flag, ~11,000 with them
+    projected once."""
 
     def _plan(self, df):
         return df._jdf.queryExecution().optimizedPlan().toString()
@@ -352,3 +355,19 @@ class TestEnrichPlanSize:
         )(df)
         s = self._plan(out)
         assert len(s) < PLAN_CHARS_MAX, f"community_id: plan string {len(s)} chars"
+
+    def test_vpcflow_plan_bounded(self, spark):
+        from beats_spark.processors.vpcflow import parse_aws_vpc_flow_log
+
+        fmt = (
+            "version account-id interface-id srcaddr dstaddr srcport dstport protocol "
+            "packets bytes start end action log-status vpc-id subnet-id instance-id "
+            "tcp-flags type pkt-srcaddr pkt-dstaddr region az-id sublocation-type "
+            "sublocation-id pkt-src-aws-service pkt-dst-aws-service flow-direction traffic-path"
+        )
+        df = spark.createDataFrame(
+            [("5 64111117617 eni-1 89.160.20.156 10.200.0.0 50041 33004 17 52 1",)],
+            "message string",
+        )
+        out = parse_aws_vpc_flow_log(["version account-id", fmt], mode="ecs_and_original")(df)
+        _assert_bounded(out, "parse_aws_vpc_flow_log")

@@ -103,7 +103,7 @@ def test_jaccard_verify_inclusion_exclusion_exact(spark):
     Python-set jaccard on the same normalization, including the [NULL]
     null-text singleton, the [''] empty-text singleton, exact dups and
     disjoint pairs."""
-    from beats_spark.datapipe.dedup import jaccard_verify, release_intermediates
+    from beats_spark.datapipe.dedup import jaccard_verify
 
     texts = {
         1: "hello world this is a document",
@@ -118,7 +118,6 @@ def test_jaccard_verify_inclusion_exclusion_exact(spark):
     pairs = spark.createDataFrame(pair_list, "id_a long, id_b long")
     out = jaccard_verify(docs, pairs, threshold=0.0)
     got = {(r["id_a"], r["id_b"]): r["jaccard"] for r in out.collect()}
-    release_intermediates(out)
 
     def sh(text):
         return frozenset(_py_char_shingles(text))

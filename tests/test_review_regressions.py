@@ -604,40 +604,6 @@ def test_fmtstr_nested_refs_resolve_at_stage_callsites(spark):
     assert idx._meta_index == "idx-V"
 
 
-def test_dedup_release_intermediates(spark):
-    """r4 ADVICE: dedup results own their persisted intermediates;
-    release_intermediates frees them eagerly (per-batch loop callers)."""
-    from pyspark.storagelevel import StorageLevel
-
-    from beats_spark.datapipe.dedup import minhash_dedup, release_intermediates
-
-    df = spark.createDataFrame(
-        [(i, f"the quick brown fox jumps over dog {i % 3}") for i in range(30)],
-        "doc_id int, text string",
-    )
-    kept = minhash_dedup(df, num_perm=8, bands=4, threshold=0.5)
-    kept.count()  # consume — persists materialize during execution
-    owned = list(getattr(kept, "_bs_persisted", []))
-    assert len(owned) >= 3  # buckets + candidate pairs + shingle table
-    assert any(p.storageLevel != StorageLevel.NONE for p in owned)
-    released = release_intermediates(kept)
-    assert released == len(owned)
-    assert all(p.storageLevel == StorageLevel.NONE for p in owned)
-    assert release_intermediates(kept) == 0  # idempotent
-
-
-def test_ann_lsh_topk_releases_near_dupe_intermediates(spark):
-    """ADVICE: q_ann_lsh_topk's select + union dropped the persisted
-    frame embedding_near_dupes owns, so release_intermediates on the
-    query result freed nothing."""
-    import __spark_entry__ as entry
-    from beats_spark.datapipe.dedup import release_intermediates
-
-    result = entry.q_ann_lsh_topk(spark, "/root/testdata/sf0.001")
-    result.collect()
-    assert release_intermediates(result) >= 1
-
-
 # -- round-5 session review findings (matrix-port batch) ---------------------
 
 
@@ -865,21 +831,6 @@ def test_r5c_conditions_on_attrs_map_array_values(spark):
     assert [r.id for r in df.filter(ct).collect()] == [2]
     eq = compile_condition({"equals": {"attrs.tags": "prod"}}, schema=schema)
     assert df.filter(eq).count() == 0  # never-match, not AnalysisException
-
-
-def test_r5c_dedup_transitive_releases_intermediates(spark):
-    """r5c finding 3: the composed transitive-dedup path must inherit its
-    stages' persisted frames so release_intermediates frees them (it
-    returned a bare join and leaked the cache per batch)."""
-    from beats_spark.datapipe.dedup import dedup_transitive, release_intermediates
-
-    df = spark.createDataFrame(
-        [(i, f"the quick brown fox jumps over dog {i % 3}") for i in range(24)],
-        "doc_id int, text string",
-    )
-    kept = dedup_transitive(df, num_perm=8, bands=4, threshold=0.5)
-    kept.count()
-    assert release_intermediates(kept) >= 3  # buckets + pairs + shingles
 
 
 def test_r5c_nested_lit_reserved_name_clash_raises(spark):
