@@ -1361,7 +1361,7 @@ def q_text_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
         c4["c4_fail_min_sentences"].alias("c4_fail_min_sentences"),
         c4["c4_pass"].alias("c4_pass"),
     )
-    lm = ngram_lm_train(docs, order=3).persist()
+    lm = ngram_lm_train(docs, order=3)
     lmc = lm_score(docs, lm, order=3).select(
         "doc_id", "lm_n_scored", "lm_n_oov", "lm_m0", "lm_m1", "lm_m2", "lm_score_fp"
     )

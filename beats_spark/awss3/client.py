@@ -28,13 +28,13 @@ import http.client
 import io
 import json
 import socket
-import ssl
 import time
 import xml.etree.ElementTree as ET
 from dataclasses import dataclass, field
 from typing import Any, Iterator, Optional
 from urllib.parse import quote, urlparse
 
+from ..httpconn import KeepAlive
 from .sigv4 import payload_hash, sign_request
 
 __all__ = ["AWSError", "S3Client", "SQSClient", "SQSMessage",
@@ -74,29 +74,13 @@ class _HttpBase:
         u = urlparse(self.endpoint)
         if not u.scheme or not u.netloc:
             raise AWSError(f"failed to parse endpoint: {self.endpoint}")
-        self._scheme = u.scheme
         self._netloc = u.netloc
-        self._conn: Optional[http.client.HTTPConnection] = None
-
-    # one keep-alive connection per client instance (per executor task
-    # in the distributed stage — the write_es_bulk pattern)
-    def _connection(self) -> http.client.HTTPConnection:
-        if self._conn is None:
-            if self._scheme == "https":
-                self._conn = http.client.HTTPSConnection(
-                    self._netloc, timeout=self.timeout,
-                    context=ssl.create_default_context())
-            else:
-                self._conn = http.client.HTTPConnection(
-                    self._netloc, timeout=self.timeout)
-        return self._conn
+        # one keep-alive connection per client instance (per executor
+        # task in the distributed stage — the write_es_bulk pattern)
+        self._http = KeepAlive(u.scheme, u.netloc, self.timeout)
 
     def close(self) -> None:
-        if self._conn is not None:
-            try:
-                self._conn.close()
-            finally:
-                self._conn = None
+        self._http.close()
 
     def _request(self, method: str, path: str,
                  query: list[tuple[str, str]] | None,
@@ -127,7 +111,7 @@ class _HttpBase:
         send_hdrs = {k: v for k, v in hdrs.items() if k.lower() != "host"}
 
         for attempt in (0, 1):
-            conn = self._connection()
+            conn = self._http.get()
             try:
                 conn.request(method, url, body=body or None,
                              headers=send_hdrs)

@@ -5,7 +5,7 @@ container's blobs in lexicographic pages, schedules one job per new
 blob past the (BlobName, LatestEntryTime) checkpoint, decodes each
 blob (JSON stream / CSV / parquet, gzip, expand lists) and publishes
 one event per decoded item. This module implements it from scratch on
-stdlib http.client (the gcs/awss3 playbook):
+the shared HTTP transport, httpconn (the gcs/awss3 playbook):
 
 Wire layer (public Azure Storage REST spec):
 - List Blobs: GET /{container}?restype=container&comp=list
@@ -71,7 +71,6 @@ import hmac as _hmac
 import http.client
 import json
 import re
-import ssl
 import time as _time
 import xml.etree.ElementTree as ET
 from dataclasses import dataclass, field
@@ -79,6 +78,7 @@ from datetime import datetime, timezone
 from typing import Any, Callable, Iterator, Optional
 from urllib.parse import quote, urlparse
 
+from . import httpconn
 from .httpjson.gotime import duration_string, parse_go_duration
 from .gcs.input import _evaluate_json  # evaluateJSON is byte-identical
 
@@ -215,29 +215,20 @@ class OAuth2TokenProvider:
         if self._token and _time.time() < self._expiry - 60:
             return self._token
         from urllib.parse import urlencode
-        u = urlparse(self.token_endpoint)
         body = urlencode({
             "client_id": self.client_id,
             "client_secret": self.client_secret,
             "grant_type": "client_credentials",
             "scope": self.SCOPE,
         }).encode()
-        cls = (http.client.HTTPSConnection if u.scheme == "https"
-               else http.client.HTTPConnection)
-        conn = cls(u.netloc, timeout=30)
-        try:
-            conn.request("POST", u.path or "/", body=body, headers={
-                "Content-Type": "application/x-www-form-urlencoded",
-                "Content-Length": str(len(body))})
-            resp = conn.getresponse()
-            data = resp.read()
-        finally:
-            conn.close()
-        if resp.status != 200:
+        status, _, _, data = httpconn.request(
+            "POST", self.token_endpoint, body,
+            {"Content-Type": "application/x-www-form-urlencoded"}, 30)
+        if status != 200:
             raise AzureBlobError(
                 "failed to create client secret credential with "
                 f"oauth2 config: {data.decode('utf-8', 'replace')[:200]}",
-                status=resp.status)
+                status=status)
         obj = json.loads(data)
         self._token = obj["access_token"]
         self._expiry = _time.time() + float(obj.get("expires_in", 3600))
@@ -277,7 +268,7 @@ class AzureBlobClient:
         u = urlparse(endpoint)
         if not u.scheme or not u.netloc:
             raise AzureBlobError(f"error parsing url : {endpoint}")
-        self._scheme, self._netloc = u.scheme, u.netloc
+        self._http = httpconn.KeepAlive(u.scheme, u.netloc, timeout)
         self._base_path = u.path.rstrip("/")
         self.credential = credential
         self.token_provider = token_provider
@@ -287,25 +278,9 @@ class AzureBlobClient:
         self.max_delay = float(r.get("max_retry_delay", 60.0))
         self.timeout = timeout
         self._sleep = sleep
-        self._conn: Optional[http.client.HTTPConnection] = None
 
     def close(self) -> None:
-        if self._conn is not None:
-            try:
-                self._conn.close()
-            finally:
-                self._conn = None
-
-    def _connection(self) -> http.client.HTTPConnection:
-        if self._conn is None:
-            if self._scheme == "https":
-                self._conn = http.client.HTTPSConnection(
-                    self._netloc, timeout=self.timeout,
-                    context=ssl.create_default_context())
-            else:
-                self._conn = http.client.HTTPConnection(
-                    self._netloc, timeout=self.timeout)
-        return self._conn
+        self._http.close()
 
     def _do(self, method: str, path: str,
             query: dict[str, str]) -> tuple[int, bytes, dict]:
@@ -328,7 +303,7 @@ class AzureBlobClient:
                           for k, v in sorted(query.items()))
             url += "?" + qs
         for attempt in (0, 1):
-            conn = self._connection()
+            conn = self._http.get()
             try:
                 conn.request(method, url, headers=headers)
                 resp = conn.getresponse()

@@ -14,15 +14,14 @@ from __future__ import annotations
 import base64
 import binascii
 import gzip as _gzip
-import http.client
 import io
 import json
-import ssl
 import time as _time
 from datetime import datetime, timedelta, timezone
 from typing import Any, Callable, Optional
 from urllib.parse import parse_qsl, quote, urlencode, urlparse, urlunparse
 
+from .. import httpconn
 from .engine import (
     CELError,
     Env,
@@ -154,9 +153,10 @@ def _canon_header(name: str) -> str:
 
 
 class HttpDialer:
-    """One keep-alive-less stdlib HTTP dialer for the program's
+    """One keep-alive-less HTTP dialer for the program's
     get/post/do_request calls, with the input's resource options
-    (basic/token auth headers, default headers, useragent)."""
+    (basic/token auth headers, default headers, useragent). https
+    verifies the server certificate (httpconn)."""
 
     def __init__(self, *, useragent: str = "", headers=None,
                  basic_auth=None, token_auth=None, timeout: float = 30.0):
@@ -171,12 +171,6 @@ class HttpDialer:
         u = urlparse(url)
         if u.scheme == "file":
             raise CELError("file scheme not supported by do_request")
-        cls = http.client.HTTPSConnection if u.scheme == "https" \
-            else http.client.HTTPConnection
-        kw = {"timeout": self.timeout}
-        if u.scheme == "https":
-            kw["context"] = ssl._create_unverified_context()
-        conn = cls(u.netloc, **kw)
         headers = {}
         for k, v in (self.headers or {}).items():
             headers[_canon_header(k)] = v if isinstance(v, str) \
@@ -197,30 +191,21 @@ class HttpDialer:
         body = request.get("Body", b"")
         if isinstance(body, str):
             body = body.encode()
-        path = (u.path or "/") + (("?" + u.query) if u.query else "")
+        method = request.get("Method", "GET")
         try:
-            conn.request(request.get("Method", "GET"), path,
-                         body=body or None, headers=headers)
-            resp = conn.getresponse()
-            data = resp.read()
+            resp = httpconn.request(method, url, body or None, headers,
+                                    self.timeout)
         except OSError as e:
-            conn.close()
-            raise CELError(
-                f'{request.get("Method", "GET")} {url} gave: {e}')
-        finally:
-            try:
-                conn.close()
-            except OSError:
-                pass
+            raise CELError(f"{method} {url} gave: {e}")
         hdr: dict[str, list[str]] = {}
-        for k, v in resp.getheaders():
+        for k, v in resp.headers:
             hdr.setdefault(_canon_header(k), []).append(v)
         return {
             "StatusCode": resp.status,
             "Status": f"{resp.status} {resp.reason}",
             "Header": hdr,
-            "Body": data,
-            "ContentLength": len(data),
+            "Body": resp.body,
+            "ContentLength": len(resp.body),
         }
 
 

@@ -55,14 +55,14 @@ Surfaces: `cloudfoundry_collect` (bounded driver-side stream read),
 from __future__ import annotations
 
 import base64
-import http.client
 import json
-import ssl
 import threading
 import time as _time
 from dataclasses import dataclass, field
 from typing import Any, Callable, Iterator, Optional
 from urllib.parse import urlencode, urlparse
+
+from . import httpconn
 
 __all__ = [
     "CloudFoundryError", "Config", "validate_config", "AuthTokenDoer",
@@ -117,30 +117,6 @@ def configure(cfg: Config):
 
 # ---------------------------------------------------------------- auth
 
-def _http_request(method: str, url: str, body: bytes = b"",
-                  headers: Optional[dict] = None,
-                  timeout: float = 60.0) -> tuple[int, bytes]:
-    u = urlparse(url)
-    cls = (http.client.HTTPSConnection if u.scheme == "https"
-           else http.client.HTTPConnection)
-    kw: dict[str, Any] = {"timeout": timeout}
-    if u.scheme == "https":
-        kw["context"] = ssl.create_default_context()
-    conn = cls(u.netloc, **kw)
-    try:
-        path = u.path or "/"
-        if u.query:
-            path += "?" + u.query
-        hdrs = dict(headers or {})
-        if body:
-            hdrs["Content-Length"] = str(len(body))
-        conn.request(method, path, body=body or None, headers=hdrs)
-        resp = conn.getresponse()
-        return resp.status, resp.read()
-    finally:
-        conn.close()
-
-
 class AuthTokenDoer:
     """doer.go — a fresh UAA token per request. token() returns the
     full Authorization header value '{token_type} {access_token}'."""
@@ -157,7 +133,7 @@ class AuthTokenDoer:
                           "grant_type": "client_credentials"}).encode()
         basic = base64.b64encode(
             f"{self.client_id}:{self.client_secret}".encode()).decode()
-        status, data = _http_request(
+        status, _, _, data = httpconn.request(
             "POST", self.url + "/oauth/token", body,
             {"Content-Type": "application/x-www-form-urlencoded",
              "Authorization": "Basic " + basic}, self.timeout)
@@ -172,7 +148,7 @@ class AuthTokenDoer:
 
 def get_cf_info(api_address: str, timeout: float = 60.0) -> dict:
     """The go-cfclient endpoint discovery: GET {api}/v2/info."""
-    status, data = _http_request(
+    status, _, _, data = httpconn.request(
         "GET", api_address.rstrip("/") + "/v2/info", timeout=timeout)
     if status != 200:
         raise CloudFoundryError(
@@ -535,18 +511,14 @@ class RlpGatewayClient:
         self.doer = doer
         self.shard_id = shard_id
         self.timeout = timeout
-        self._conn: Optional[http.client.HTTPConnection] = None
+        self._conn = None
         self._resp = None
         self._stop = threading.Event()
 
     def connect(self, selectors: list[str]) -> None:
         u = urlparse(self.rlp_address)
-        cls = (http.client.HTTPSConnection if u.scheme == "https"
-               else http.client.HTTPConnection)
-        kw: dict[str, Any] = {"timeout": self.timeout}
-        if u.scheme == "https":
-            kw["context"] = ssl.create_default_context()
-        self._conn = cls(u.netloc, **kw)
+        self._conn = httpconn.open_connection(u.scheme, u.netloc,
+                                              self.timeout)
         params = [("shard_id", self.shard_id)] if self.shard_id else []
         qs = urlencode(params)
         for sel in selectors:

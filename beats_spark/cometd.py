@@ -43,11 +43,12 @@ from __future__ import annotations
 
 import http.client
 import json
-import ssl
 import time as _time
 from dataclasses import dataclass, field
 from typing import Any, Callable, Iterator, Optional
-from urllib.parse import urlencode, urlparse
+from urllib.parse import urlencode
+
+from . import httpconn
 
 __all__ = [
     "CometDError", "Config", "default_config", "validate_oauth2",
@@ -98,29 +99,6 @@ def validate_oauth2(cfg: Config) -> None:
 
 # ---------------------------------------------------------------- wire
 
-def _http_post(url: str, body: bytes, headers: dict,
-               timeout: float = 120.0) -> tuple[int, bytes, dict]:
-    u = urlparse(url)
-    cls = (http.client.HTTPSConnection if u.scheme == "https"
-           else http.client.HTTPConnection)
-    kw = {"timeout": timeout}
-    if u.scheme == "https":
-        kw["context"] = ssl.create_default_context()
-    conn = cls(u.netloc, **kw)
-    try:
-        path = u.path or "/"
-        if u.query:
-            path += "?" + u.query
-        hdrs = dict(headers)
-        hdrs["Content-Length"] = str(len(body))
-        conn.request("POST", path, body=body, headers=hdrs)
-        resp = conn.getresponse()
-        data = resp.read()
-        return resp.status, data, dict(resp.getheaders())
-    finally:
-        conn.close()
-
-
 def get_salesforce_credentials(cfg: Config,
                                timeout: float = 120.0
                                ) -> dict[str, str]:
@@ -132,8 +110,8 @@ def get_salesforce_credentials(cfg: Config,
         "username": cfg.user,
         "password": cfg.password,
     }).encode()
-    status, data, _ = _http_post(
-        cfg.token_url, body,
+    status, _, _, data = httpconn.request(
+        "POST", cfg.token_url, body,
         {"Content-Type": "application/x-www-form-urlencoded"},
         timeout)
     if status != 200:
@@ -177,12 +155,12 @@ class BayeuxClient:
                 f"{k}={v}" for k, v in self.cookies.items())
         body = json.dumps(payload).encode()
         try:
-            status, data, resp_headers = _http_post(
-                self.endpoint, body, headers, self.timeout)
+            status, _, resp_headers, data = httpconn.request(
+                "POST", self.endpoint, body, headers, self.timeout)
         except (OSError, http.client.HTTPException) as e:
             raise CometDError(
                 f"{e}: trying again") from e
-        for k, v in resp_headers.items():
+        for k, v in dict(resp_headers).items():
             if k.lower() == "set-cookie":
                 name, _, rest = v.partition("=")
                 self.cookies[name.strip()] = rest.split(";")[0]

@@ -6,8 +6,8 @@ provider/okta/) maintains a local database of identity entities
 periodic FULL sync republishes every known entity between start/end
 write markers, and an incremental UPDATE publishes only entities
 whose `lastUpdated` moved past the stored watermark query. This
-module implements the okta provider from scratch on stdlib
-http.client:
+module implements the okta provider from scratch on the shared HTTP
+transport (httpconn):
 
 - internal/okta/okta.go  → the API surface (GET /api/v1/users,
                            /api/v1/devices, per-user groups/factors/
@@ -58,15 +58,15 @@ the sink consumed the batch).
 
 from __future__ import annotations
 
-import http.client
 import json
 import os
-import ssl
 import time as _time
 from dataclasses import dataclass, field
 from datetime import datetime, timezone
 from typing import Any, Callable, Iterator, Optional
 from urllib.parse import parse_qsl, urlencode, urlparse
+
+from . import httpconn
 
 __all__ = [
     "OktaError", "OktaRateLimiter", "OktaClient", "next_link_query",
@@ -355,32 +355,23 @@ class OktaClient:
         if query:
             url += "?" + urlencode(sorted(query.items()))
         self.requests.append(url)
-        cls = (http.client.HTTPSConnection if self.scheme == "https"
-               else http.client.HTTPConnection)
-        kw: dict[str, Any] = {"timeout": self.timeout}
-        if self.scheme == "https":
-            kw["context"] = ssl.create_default_context()
-        conn = cls(self.netloc, **kw)
-        try:
-            headers = {"Accept": "application/json"}
-            if self.authorization is not None:
-                headers["Authorization"] = self.authorization()
-            elif self.token:
-                headers["Authorization"] = "SSWS " + self.token
-            conn.request("GET", url, headers=headers)
-            resp = conn.getresponse()
-            data = resp.read()
-            hdrs: dict[str, Any] = {}
-            for k, v in resp.getheaders():
-                if k.lower() == "link":
-                    hdrs.setdefault("link", []).append(v)
-                else:
-                    hdrs[k] = v
-        finally:
-            conn.close()
+        headers = {"Accept": "application/json"}
+        if self.authorization is not None:
+            headers["Authorization"] = self.authorization()
+        elif self.token:
+            headers["Authorization"] = "SSWS " + self.token
+        resp = httpconn.request(
+            "GET", f"{self.scheme}://{self.netloc}{url}",
+            headers=headers, timeout=self.timeout)
+        hdrs: dict[str, Any] = {}
+        for k, v in resp.headers:
+            if k.lower() == "link":
+                hdrs.setdefault("link", []).append(v)
+            else:
+                hdrs[k] = v
         self.lim.update(path, hdrs)
         try:
-            obj = json.loads(data)
+            obj = json.loads(resp.body)
         except ValueError as e:
             raise OktaError({"errorSummary": f"invalid response: {e}"})
         if isinstance(obj, dict) and ("errorCode" in obj

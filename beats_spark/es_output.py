@@ -59,6 +59,8 @@ from urllib.parse import urlencode, urlsplit
 
 from pyspark.sql import DataFrame
 
+from .httpconn import KeepAlive
+
 __all__ = [
     "ESProtocolError",
     "ESConnection",
@@ -93,17 +95,16 @@ class ESProtocolError(ValueError):
 
 class ESConnection:
     """One keep-alive HTTP connection to one ES host (eslegclient
-    Connection analog, stdlib http.client).
+    Connection analog, over the shared transport httpconn).
 
     `url` is scheme://host:port[/path-prefix]. Auth: `username`/
     `password` → Basic (connection.go:486), `api_key` ("id:key") →
     `Authorization: ApiKey base64(...)` (connection.go:190-192,490).
     `params` are merged under the bulk call's filter_path like
-    mergeParams (bulkapi.go:184-199, call params win). TLS rides
-    http.client.HTTPSConnection built from the beats-style `tls`
-    config block (beats_spark.tlsutil: certificate_authorities,
-    client cert, verification_mode) with the ca_sha256 pin checked
-    after the handshake.
+    mergeParams (bulkapi.go:184-199, call params win). TLS is built
+    from the beats-style `tls` config block (beats_spark.tlsutil:
+    certificate_authorities, client cert, verification_mode) with the
+    ca_sha256 pin checked after the handshake (httpconn).
     """
 
     def __init__(
@@ -120,11 +121,13 @@ class ESConnection:
         parts = urlsplit(url)
         if parts.scheme not in ("http", "https"):
             raise ValueError(f"unsupported scheme in ES url: {url!r}")
-        self._scheme = parts.scheme
-        self._host = parts.hostname or "localhost"
-        self._port = parts.port or (443 if parts.scheme == "https" else 9200)
+        host = parts.hostname or "localhost"
+        if ":" in host:
+            host = f"[{host}]"  # IPv6 literal
+        port = parts.port or (443 if parts.scheme == "https" else 9200)
+        self._http = KeepAlive(parts.scheme, f"{host}:{port}", timeout,
+                               tls)
         self._prefix = parts.path.rstrip("/")
-        self._timeout = timeout
         self.params = dict(params or {})
         self.headers: dict[str, str] = dict(headers or {})
         if username:
@@ -134,43 +137,6 @@ class ESConnection:
             self.headers["Authorization"] = (
                 "ApiKey " + base64.b64encode(api_key.encode()).decode()
             )
-        self._conn = None
-        self._tls = tls
-
-    def _http(self):
-        if self._conn is None:
-            import http.client
-
-            if self._scheme == "https":
-                kw = {}
-                if self._tls:
-                    from .tlsutil import client_ssl_context
-                    kw["context"] = client_ssl_context(self._tls)
-                conn = http.client.HTTPSConnection(
-                    self._host, self._port, timeout=self._timeout,
-                    **kw)
-                if self._tls and self._tls.get("ca_sha256"):
-                    # run the pin check BEFORE caching the connection
-                    # (r6 ADVICE: assigning self._conn first left a
-                    # pinned-but-unchecked connection cached when the
-                    # check raised), and pass the configured CAs so the
-                    # ES path accepts a CA-cert pin exactly like
-                    # wrap_client_socket does
-                    from .tlsutil import check_ca_sha256
-                    conn.connect()
-                    try:
-                        check_ca_sha256(
-                            conn.sock,
-                            self._tls["ca_sha256"],
-                            self._tls.get("certificate_authorities"))
-                    except Exception:
-                        conn.close()
-                        raise
-                self._conn = conn
-            else:
-                self._conn = http.client.HTTPConnection(
-                    self._host, self._port, timeout=self._timeout)
-        return self._conn
 
     def request(
         self,
@@ -185,7 +151,7 @@ class ESConnection:
         qs = ("?" + urlencode(merged)) if merged else ""
         hdrs = dict(self.headers)
         hdrs.update(headers or {})
-        conn = self._http()
+        conn = self._http.get()
         try:
             conn.request(method, self._prefix + path + qs, body=body, headers=hdrs)
             resp = conn.getresponse()
@@ -198,11 +164,7 @@ class ESConnection:
             raise ESProtocolError(f"ES request failed: {e}") from e
 
     def close(self) -> None:
-        if self._conn is not None:
-            try:
-                self._conn.close()
-            finally:
-                self._conn = None
+        self._http.close()
 
 
 def parse_version(number: str) -> tuple[int, int]:

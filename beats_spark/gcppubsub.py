@@ -56,12 +56,13 @@ import base64
 import hashlib
 import http.client
 import json
-import ssl
 import time as _time
 from dataclasses import dataclass, field
 from datetime import datetime, timezone
 from typing import Any, Callable, Iterator, Optional
 from urllib.parse import quote, urlparse
+
+from . import httpconn
 
 __all__ = [
     "PubSubError", "PubSubClient", "PubSubMessage", "Config",
@@ -155,30 +156,14 @@ class PubSubClient:
         u = urlparse(endpoint)
         if not u.scheme or not u.netloc:
             raise PubSubError(f"failed to parse endpoint: {endpoint}")
-        self._scheme, self._netloc = u.scheme, u.netloc
+        self._http = httpconn.KeepAlive(u.scheme, u.netloc, timeout)
         self.project = project
         self.token_provider = token_provider
         self.timeout = timeout
         self.user_agent = user_agent
-        self._conn: Optional[http.client.HTTPConnection] = None
 
     def close(self) -> None:
-        if self._conn is not None:
-            try:
-                self._conn.close()
-            finally:
-                self._conn = None
-
-    def _connection(self) -> http.client.HTTPConnection:
-        if self._conn is None:
-            if self._scheme == "https":
-                self._conn = http.client.HTTPSConnection(
-                    self._netloc, timeout=self.timeout,
-                    context=ssl.create_default_context())
-            else:
-                self._conn = http.client.HTTPConnection(
-                    self._netloc, timeout=self.timeout)
-        return self._conn
+        self._http.close()
 
     def _request(self, method: str, path: str,
                  payload: Optional[dict] = None) -> tuple[int, dict]:
@@ -191,7 +176,7 @@ class PubSubClient:
         if self.token_provider is not None:
             hdrs["Authorization"] = "Bearer " + self.token_provider.token()
         for attempt in (0, 1):
-            conn = self._connection()
+            conn = self._http.get()
             try:
                 conn.request(method, quote(path, safe="/:~"),
                              body=body or None, headers=hdrs)

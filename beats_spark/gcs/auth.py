@@ -114,25 +114,17 @@ class ServiceAccountAuth:
     def token(self) -> str:
         if self._token and self._now() < self._expires - 60:
             return self._token
-        import http.client
-        from urllib.parse import urlencode, urlparse
+        from urllib.parse import urlencode
 
-        u = urlparse(self.token_uri)
+        from ..httpconn import request
+
         body = urlencode({"grant_type": self.GRANT,
                           "assertion": self.make_assertion()}).encode()
-        cls = http.client.HTTPSConnection if u.scheme == "https" \
-            else http.client.HTTPConnection
-        conn = cls(u.netloc, timeout=30)
-        try:
-            conn.request("POST", u.path or "/", body=body, headers={
-                "Content-Type": "application/x-www-form-urlencoded"})
-            resp = conn.getresponse()
-            data = resp.read()
-        finally:
-            conn.close()
-        if resp.status != 200:
+        status, _, _, data = request("POST", self.token_uri, body, {
+            "Content-Type": "application/x-www-form-urlencoded"}, 30)
+        if status != 200:
             raise ValueError(
-                f"oauth2: cannot fetch token: {resp.status}: "
+                f"oauth2: cannot fetch token: {status}: "
                 f"{data.decode('utf-8', 'replace')[:200]}")
         tok = json.loads(data)
         self._token = tok["access_token"]

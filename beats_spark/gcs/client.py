@@ -1,4 +1,4 @@
-"""GCS JSON-API client over stdlib http.client.
+"""GCS JSON-API client over the shared HTTP transport (httpconn).
 
 Request shapes are the ones cloud.google.com/go/storage emits — the
 reference's own mock server (x-pack/filebeat/input/gcs/mock/mock.go)
@@ -13,11 +13,12 @@ from __future__ import annotations
 
 import http.client
 import json
-import ssl
 import time
 from dataclasses import dataclass, field
 from typing import Iterator, Optional
 from urllib.parse import quote, urlencode, urlparse
+
+from ..httpconn import KeepAlive
 
 __all__ = ["GCSError", "GCSObject", "GCSClient"]
 
@@ -64,7 +65,7 @@ class GCSClient:
         u = urlparse(endpoint)
         if not u.scheme or not u.netloc:
             raise GCSError(f"failed to parse endpoint: {endpoint}")
-        self._scheme, self._netloc = u.scheme, u.netloc
+        self._http = KeepAlive(u.scheme, u.netloc, timeout)
         self.token_provider = token_provider
         self.timeout = timeout
         r = retry or {}
@@ -73,24 +74,9 @@ class GCSClient:
         self.max_backoff = float(r.get("max_backoff_duration", 30))
         self.multiplier = float(r.get("backoff_multiplier", 2.0))
         self._sleep = sleep
-        self._conn = None
 
     def close(self) -> None:
-        if self._conn is not None:
-            try:
-                self._conn.close()
-            finally:
-                self._conn = None
-
-    def _connection(self):
-        if self._conn is None:
-            cls = http.client.HTTPSConnection if self._scheme == "https" \
-                else http.client.HTTPConnection
-            kw = {"timeout": self.timeout}
-            if self._scheme == "https":
-                kw["context"] = ssl.create_default_context()
-            self._conn = cls(self._netloc, **kw)
-        return self._conn
+        self._http.close()
 
     def _get(self, path: str, query: Optional[dict] = None
              ) -> tuple[int, bytes]:
@@ -104,7 +90,7 @@ class GCSClient:
         backoff = self.initial_backoff
         last: tuple[int, bytes] = (0, b"")
         for attempt in range(self.max_attempts):
-            conn = self._connection()
+            conn = self._http.get()
             try:
                 conn.request("GET", url, headers=headers)
                 resp = conn.getresponse()

@@ -33,6 +33,7 @@ import json
 import time as _time
 from typing import Any, Callable, Dict, List, Optional, Tuple
 
+from .. import httpconn
 from . import mapstr
 from .chain import ChainError, ids_from_bodies
 from .encdec import (REGISTERED_DECODERS, REGISTERED_ENCODERS, DecodeError,
@@ -393,29 +394,14 @@ class HttpClient:
     # -- single physical request, following redirects
     def _do_plain(self, method: str, url: URL, header: Header,
                   body: Optional[bytes]):
-        import http.client
         redirects = 0
         while True:
-            if url.Scheme == "https":
-                conn = http.client.HTTPSConnection(url.Host,
-                                                   timeout=self.cfg.timeout)
-            else:
-                conn = http.client.HTTPConnection(url.Host,
-                                                  timeout=self.cfg.timeout)
-            path = url.Path or "/"
-            if url.RawQuery:
-                path += "?" + url.RawQuery
             headers = {k: ", ".join(v) for k, v in header.items()}
-            try:
-                conn.request(method, path, body=body, headers=headers)
-                resp = conn.getresponse()
-                data = resp.read()
-                h = Header()
-                for k, v in resp.getheaders():
-                    h.Add(k, v)
-                status = resp.status
-            finally:
-                conn.close()
+            status, _, pairs, data = httpconn.request(
+                method, url.String(), body, headers, self.cfg.timeout)
+            h = Header()
+            for k, v in pairs:
+                h.Add(k, v)
             if status in (301, 302, 303, 307, 308) and redirects < \
                     self.cfg.max_redirects and h.Get("Location"):
                 from urllib.parse import urljoin

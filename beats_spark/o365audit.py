@@ -6,7 +6,7 @@ content "blobs" over repeating [start, end) windows (max 24 h wide,
 bounded by the 7-day retention), fetch each blob's audit objects, and
 publish one event per object with a (timestamp, line, start_time)
 checkpoint that makes resume line-exact inside a blob. This module
-implements it from scratch on stdlib http.client:
+implements it from scratch on the shared HTTP transport (httpconn):
 
 - config.go     → defaults (the five documented content types, the
                   API block), Validate's exact wordings
@@ -59,15 +59,15 @@ checkpoint-after-sink).
 
 from __future__ import annotations
 
-import http.client
 import json
-import ssl
 import time as _time
 from dataclasses import dataclass, field, replace
 from datetime import datetime, timedelta, timezone
 from email.utils import parsedate_to_datetime
 from typing import Any, Callable, Iterator, Optional
 from urllib.parse import urlencode, urlparse
+
+from . import httpconn
 
 __all__ = [
     "O365Error", "Config", "APIConfig", "default_config",
@@ -198,7 +198,7 @@ class TokenProvider:
             "client_secret": self.secret,
             "resource": self.resource,
         }).encode()
-        status, data, _ = _http("POST", url, body, {
+        status, _, _, data = httpconn.request("POST", url, body, {
             "Content-Type": "application/x-www-form-urlencoded"},
             self.timeout)
         if status != 200:
@@ -275,7 +275,7 @@ class CertTokenProvider(TokenProvider):
             "client_assertion": self._assertion(url),
             "resource": self.resource,
         }).encode()
-        status, data, _ = _http("POST", url, body, {
+        status, _, _, data = httpconn.request("POST", url, body, {
             "Content-Type": "application/x-www-form-urlencoded"},
             self.timeout)
         if status != 200:
@@ -287,30 +287,6 @@ class CertTokenProvider(TokenProvider):
         self._expiry = self.now() + float(obj.get("expires_in",
                                                   3600))
         return self._token
-
-
-def _http(method: str, url: str, body: bytes = b"",
-          headers: Optional[dict] = None,
-          timeout: float = 60.0) -> tuple[int, bytes, dict]:
-    u = urlparse(url)
-    cls = (http.client.HTTPSConnection if u.scheme == "https"
-           else http.client.HTTPConnection)
-    kw: dict[str, Any] = {"timeout": timeout}
-    if u.scheme == "https":
-        kw["context"] = ssl.create_default_context()
-    conn = cls(u.netloc, **kw)
-    try:
-        path = u.path or "/"
-        if u.query:
-            path += "?" + u.query
-        hdrs = dict(headers or {})
-        if body:
-            hdrs["Content-Length"] = str(len(body))
-        conn.request(method, path, body=body or None, headers=hdrs)
-        resp = conn.getresponse()
-        return resp.status, resp.read(), dict(resp.getheaders())
-    finally:
-        conn.close()
 
 
 # --------------------------------------------------------------- dates
@@ -521,8 +497,9 @@ class Poller:
         if params:
             url += ("&" if "?" in url else "?") + urlencode(params)
         self.requests.append((method, url, dict(params or {})))
-        return _http(method, url, b"", {
+        r = httpconn.request(method, url, headers={
             "Authorization": "Bearer " + self.tokens.token()})
+        return r.status, r.body, dict(r.headers)
 
     def _list_url(self) -> str:
         return (f"{self.resource.rstrip('/')}/api/v1.0/"

@@ -6,8 +6,8 @@ Salesforce events two ways on independent intervals: the Object method
 (a templated SOQL query over real-time event objects) and the
 EventLogFile method (a SOQL query listing log files whose CSV bodies
 are downloaded and streamed row by row). This module implements the
-whole program from scratch on stdlib http.client and the repo's Go
-text/template engine:
+whole program from scratch on the shared HTTP transport (httpconn)
+and the repo's Go text/template engine:
 
 - value_tpl.go → the SOQL value templates ride the httpjson template
                  engine ([[ ]] delimiters, missingkey=error) with the
@@ -59,15 +59,14 @@ their intervals via the tick clock with cursor-after-sink.
 from __future__ import annotations
 
 import base64
-import http.client
 import json
-import ssl
 import time as _time
 from dataclasses import dataclass, field, replace
 from datetime import datetime, timedelta, timezone
 from typing import Any, Callable, Iterator, Optional
-from urllib.parse import quote, urlencode, urlparse
+from urllib.parse import quote, urlencode
 
+from . import httpconn
 from .httpjson.tpl import (TemplateError, _Evaluator, _MissingKey,
                            _parse_template)
 from .httpjson.gotime import (GoDuration, GoTime, GoTimeError,
@@ -439,30 +438,6 @@ def next_object_batch_window(cursor: DateTimeCursor,
 
 # ---------------------------------------------------------------- auth
 
-def _http(method: str, url: str, body: bytes = b"",
-          headers: Optional[dict] = None,
-          timeout: float = 60.0) -> tuple[int, bytes]:
-    u = urlparse(url)
-    cls = (http.client.HTTPSConnection if u.scheme == "https"
-           else http.client.HTTPConnection)
-    kw: dict[str, Any] = {"timeout": timeout}
-    if u.scheme == "https":
-        kw["context"] = ssl.create_default_context()
-    conn = cls(u.netloc, **kw)
-    try:
-        path = u.path or "/"
-        if u.query:
-            path += "?" + u.query
-        hdrs = dict(headers or {})
-        if body:
-            hdrs["Content-Length"] = str(len(body))
-        conn.request(method, path, body=body or None, headers=hdrs)
-        resp = conn.getresponse()
-        return resp.status, resp.read()
-    finally:
-        conn.close()
-
-
 class SalesforceSession:
     """go-sfdc session.Open: the password or JWT bearer grant against
     {base}/services/oauth2/token; retains access token + instance
@@ -489,7 +464,7 @@ class SalesforceSession:
             form = {"grant_type":
                     "urn:ietf:params:oauth:grant-type:jwt-bearer",
                     "assertion": self._jwt_assertion()}
-        status, data = _http(
+        status, _, _, data = httpconn.request(
             "POST", base + "/services/oauth2/token",
             urlencode(form).encode(),
             {"Content-Type": "application/x-www-form-urlencoded"})
@@ -551,8 +526,8 @@ def soql_query(session: SalesforceSession, version: int, query: str
     url = (f"{base}/services/data/v{version}.0/query"
            f"?q={quote(query)}")
     while True:
-        status, data = _http("GET", url,
-                             headers=session.auth_header())
+        status, _, _, data = httpconn.request(
+            "GET", url, headers=session.auth_header())
         if status != 200:
             raise SalesforceError(
                 f"soql query failed: {status} "
@@ -782,12 +757,12 @@ class SalesforceCollector:
         return total
 
     def _fetch_and_publish_log_file(self, logfile: str) -> int:
-        status, data = _http(
+        status, _, _, data = httpconn.request(
             "GET", self.cfg.url.rstrip("/") + logfile,
             headers=self.session.auth_header())
         if status == 401:
             self.session.open()
-            status, data = _http(
+            status, _, _, data = httpconn.request(
                 "GET", self.cfg.url.rstrip("/") + logfile,
                 headers=self.session.auth_header())
         if status != 200:

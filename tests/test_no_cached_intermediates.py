@@ -60,6 +60,7 @@ def test_datapipe_operators_leave_no_cache_and_reuse_exchanges(spark):
         "dup_span_stats": dup_span_stats(docs, window=15),
         "pack_sequences": manifest,
         "q_ann_lsh_topk": entry.q_ann_lsh_topk(spark, SF),
+        "q_text_signals": entry.q_text_signals(spark, SF),
         "minhash_lsh_candidates": minhash_lsh_candidates(docs),
     }.items():
         df.collect()

@@ -1,9 +1,13 @@
-"""TLS for the socket wire clients (kafka, mqtt, ES output).
+"""TLS for the socket wire clients (kafka, mqtt, ES output) and the
+shared HTTP transport.
 
 Exercises beats_spark.tlsutil's beats-style ssl block (CAs,
 verification modes, client certs, the ca_sha256 pin) over live TLS
 servers: the kafka fake broker and mqtt fake broker wrapped in
 server contexts, and an https ES endpoint with pin match/mismatch.
+The HTTP inputs open their connections through beats_spark.httpconn:
+CEL's do_request refuses a self-signed server, and a source scan
+keeps every other module from building its own connection.
 """
 
 from __future__ import annotations
@@ -376,3 +380,69 @@ def test_ca_sha256_under_verification_mode_none(tmp_path):
         assert "events" in str(md)
     finally:
         b.stop()
+
+
+# ------------------------------------------------------ HTTP transport
+
+def test_cel_do_request_verifies_certificate(tmp_path):
+    """CEL's do_request rides the shared transport, so https checks
+    the server certificate: a self-signed server is refused with the
+    verification failure in the CEL error."""
+    from http.server import BaseHTTPRequestHandler, \
+        ThreadingHTTPServer
+    from beats_spark.cel.engine import CELError
+    from beats_spark.cel.input import compile_input_program
+    cert, key, _der = _self_signed(tmp_path)
+
+    class H(BaseHTTPRequestHandler):
+        def log_message(self, *a):
+            pass
+
+        def do_GET(self):
+            self.send_response(200)
+            self.send_header("Content-Length", "2")
+            self.end_headers()
+            self.wfile.write(b"ok")
+
+    httpd = ThreadingHTTPServer(("127.0.0.1", 0), H)
+    httpd.socket = server_ssl_context(cert, key).wrap_socket(
+        httpd.socket, server_side=True)
+    threading.Thread(target=httpd.serve_forever, daemon=True).start()
+    try:
+        prog, optional_ns = compile_input_program(
+            "get_request(state.url).do_request()")
+        url = f"https://127.0.0.1:{httpd.server_address[1]}/"
+        with pytest.raises(CELError,
+                           match="CERTIFICATE_VERIFY_FAILED"):
+            prog.eval({"state": {"url": url},
+                       "optional": optional_ns})
+    finally:
+        httpd.shutdown()
+        httpd.server_close()
+
+
+def test_http_connections_open_only_in_httpconn():
+    """Every HTTP client connection is built by beats_spark/httpconn.py
+    (one TLS policy), and nothing turns certificate checks off. A
+    reference to the connection classes counts, not only a call, so
+    `cls = HTTPSConnection if ... else HTTPConnection; cls(...)` is
+    caught too."""
+    import ast
+    import pathlib
+    root = pathlib.Path(__file__).resolve().parent.parent / "beats_spark"
+    classes = {"HTTPConnection", "HTTPSConnection"}
+    bad = []
+    for path in sorted(root.rglob("*.py")):
+        src = path.read_text()
+        if "_create_unverified_context" in src:
+            bad.append(f"{path.relative_to(root)}: "
+                       "_create_unverified_context")
+        if path.name == "httpconn.py":
+            continue
+        for node in ast.walk(ast.parse(src)):
+            name = (node.attr if isinstance(node, ast.Attribute) else
+                    node.id if isinstance(node, ast.Name) else None)
+            if name in classes:
+                bad.append(f"{path.relative_to(root)}:{node.lineno}: "
+                           f"{name}")
+    assert bad == [], "\n".join(bad)
